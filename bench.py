@@ -1,47 +1,292 @@
-"""Benchmark: run every registered operator at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) and print ONE JSON line.
+"""Benchmark: time every roster row over the test data in
+$SPARK_GRAFT_SF_DIR (default: sf0.1) and print ONE compact JSON line.
 
-Each query is forced end-to-end with the `noop` sink (full JVM-side
-execution, no Python row transfer) so timings measure the Spark plan,
+    python bench.py                   # full suite, record in BENCH_local.json
+    python bench.py --rows a,b,...    # only the entries holding these rows
+
+Each operator is forced end-to-end with the `noop` sink (full JVM-side
+execution, no Python row transfer), so timings measure the Spark plan,
 not py4j serialization. Compare against BASELINE.md §3 targets.
 
-Each query runs $SPARK_GRAFT_BENCH_REPS times (default 3) and the
-MEDIAN is reported: single-shot timings on a loaded 32-core box swing
-up to 12x run-to-run (r3 vs r4 measured identical code at 1.4s vs
-14s), which would drown any real regression signal. The cache is
-cleared between reps so no rep reads a prior rep's persisted
-relations.
+Every row reports the MEDIAN of $SPARK_GRAFT_BENCH_REPS reps (default
+3), and up to $SPARK_GRAFT_BENCH_MAX_REPS (default 5) while the samples
+of an entry's first row stay load-noisy: single-shot timings on a
+loaded box swing up to 12x run to run (r3 vs r4 measured identical code
+at 1.4 s vs 14 s). A JVM System.gc() runs before every t0 (r13), so a
+rep pays for its own operator, not the heap debt of the rows before it
+in the suite (dd8: 1.05 s solo vs bimodal 1.0/4.5 s in-suite without
+it; BASELINE.md §4).
 
-Methodology change (r13): a JVM System.gc() runs before every timed
-rep. Root cause of the dd7/dd8 "two-round drift" (VERDICT r12 item
-2): as the suite grew r10->r12, each query accumulated heap debt from
-the ~N queries before it (dead block metadata + codegen classes from
-clearCache'd persists), and cache-rebuild-heavy rows started paying
-4-15 s full-GC pauses on some reps — dd8 measured a stable ~1.05 s
-solo vs 2.1-2.3 s in-suite with bimodal 1.0/4.5 s reps, and a forced
-GC before each rep restored a tight ~1.3-1.4 s band in the same
-session. Collecting BEFORE t0 charges each operator its own cost,
-not the suite's position-dependent garbage; expect a one-time
-downward step on rebuild-heavy rows vs r12 numbers (BASELINE.md §4).
+`roster()` is the one list of what runs. An entry is (rows, steps,
+policy): step i is timed as row i and its result feeds step i+1 of the
+same rep; a step returning a dict adds a sample per key to derived rows.
+- "cold": `_rep_reset()` before every rep, so each rep rebuilds its
+  session-cached seams; later steps of a chain price their increment on
+  the rep's still-warm state (pl13/ann14 warm re-runs, bpe, ann10->11).
+- "warm-store": clearCache and an untimed setup, then reps with no reset
+  between them: a long-lived store (dd20_refresh) or a driver loop (exp_*).
 """
 
 from __future__ import annotations
 
+import argparse
+import functools
+import importlib
 import json
 import os
 import statistics
 import sys
+import tempfile
 import time
+from collections.abc import Callable
 from pathlib import Path
+from typing import NamedTuple
 
 REPO = Path(__file__).resolve().parent
 sys.path.insert(0, str(REPO))
 
+# the non-registry operator rows, in artifact order; an operator rotated
+# out of the registry (r13, r14) takes an extras slot so the row set stays
+EXTRAS = """
+ann3_ivf_topk pl14_curriculum_order dd18_crossmodal_verify tx1_token_count
+pl1_corpus_prep ann13_cluster_quality dd19_containment_screen ev12_lag_quantiles
+tx17_tfidf_keywords ann15_cluster_keywords tx18_langid_eval tx5_ngram_stats
+mm1_decode_metadata pl18_temperature_mix ev13_type_transitions ev14_session_funnel
+pl19_temperature_apply k5_late_shipment_priority s10_jsonl_clean s10_jsonl_report
+s11_csv_clean s11_csv_report dd21_lsh_s_curve pl20_pack_efficiency
+tx20_tokenizer_fertility ann17_filtered_topk ann18_range_search pl21_fair_interleave
+dd22_minhash_calibration dd23_contamination_report pl22_pps_sample a13_regret_curve
+a14_param_importance a15_earlystop_savings mm9_multimodal_pack_plan pl23_weighted_sample
+g14_pbt_schedule ann19_filtered_ivf ann20_selective_filtered_ivf
+ann21_routing_recall_curve pl24_doremi_reweight ann22_incremental_store
+""".split()
+
+# derived from exp_random16_noop, so the suite total leaves them out
+COMPONENTS = ("exp_per_trial_overhead", "exp_submit_to_first_task", "exp_last_task_to_result")
+
+
+class Entry(NamedTuple):
+    rows: tuple[str, ...]
+    steps: tuple[Callable, ...]  # step(spark, sf_dir, prev) -> next prev
+    policy: str = "cold"  # or "warm-store"
+    setup: Callable | None = None  # warm-store only: setup(spark, sf_dir), untimed
+
+
+def _tick(spark) -> float:
+    spark._jvm.System.gc()  # before the clock: see the module docstring
+    return time.time()
+
+
+def _rep_reset(spark) -> None:
+    # leave no session-scoped state of ANY type: the session-cache handles
+    # and memoized corpus counts survive clearCache (pinned by tests/
+    # test_review_fixes.py::test_rep_boundary_leaves_no_session_state)
+    from maggy_spark.plans.fixtures import invalidate_session_cache
+
+    invalidate_session_cache(spark)
+    spark.catalog.clearCache()
+
+
+def _noop(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
+
+
+def _op(fn: Callable) -> Callable:
+    """Step forcing one `(spark, sf_dir) -> DataFrame` operator."""
+
+    def step(spark, sf_dir, _prev):
+        _noop(fn(spark, sf_dir))
+
+    step.op = fn
+    return step
+
+
+def _hpo(num_trials: int, optimizer, **kw):
+    from maggy_spark import Searchspace
+    from maggy_spark.config import HyperparameterOptConfig
+
+    return HyperparameterOptConfig(num_trials=num_trials, optimizer=optimizer, direction="max",
+                                   searchspace=Searchspace(x=("DOUBLE", [0.0, 1.0])),
+                                   es_policy="none", **kw)
+
+
+def _exp_rows() -> list[Entry]:
+    """Experiment-level targets (BASELINE.md §3): wall time of 16-trial
+    near-noop searches through each driver loop, held to <= 2 s/trial."""
+    from maggy_spark import lagom
+    from maggy_spark.optimizers import Pbt
+
+    def clock(x):
+        import time as _t
+
+        return _t.time()
+
+    def hb_fn(x, budget, reporter):
+        val = -((x - 0.3) ** 2)
+        for step in range(int(budget)):
+            reporter.broadcast(val * (step + 1) / budget, step)
+        return val
+
+    def quad(x):
+        return -((x - 0.3) ** 2)
+
+    def random16(spark, sf_dir, _prev):
+        # clock() returns each trial's start, so with direction=max worst/best
+        # are the FIRST/LAST starts. Local mode only: executor clocks meet the
+        # driver's t0/t1 (the max(0, .) clamp absorbs residual skew)
+        t0 = time.time()
+        res = lagom(clock, random_cfg, spark)
+        t1 = time.time()
+        return {
+            "exp_per_trial_overhead": (t1 - t0) / (16 / 4),  # wall / trials per slot
+            "exp_submit_to_first_task": max(0.0, res["worst_val"] - t0),
+            "exp_last_task_to_result": max(0.0, t1 - res["best_val"]),
+        }
+
+    def driver_loop(row, fn, cfg, n):
+        def step(spark, sf_dir, _prev):
+            if lagom(fn, cfg, spark)["num_trials"] != n:
+                raise RuntimeError(f"{row}: expected {n} trials")
+
+        return Entry((row,), (step,), "warm-store")
+
+    random_cfg = _hpo(16, "randomsearch", seed=42, parallelism=4)
+    hb = _hpo(3, "randomsearch", seed=42, parallelism=4, pruner="hyperband",  # ladder: 17 trials
+              pruner_kwargs={"min_budget": 1, "max_budget": 9, "eta": 3, "n_iterations": 2})
+    return [
+        Entry(("exp_random16_noop", *COMPONENTS), (random16,), "warm-store",  # warms python workers
+              lambda spark, sf_dir: lagom(clock, _hpo(1, "randomsearch", seed=1), spark)),
+        driver_loop("exp_hyperband_noop", hb_fn, hb, 17),
+        driver_loop("exp_gp_bo_16", quad, _hpo(16, "gp", seed=42, parallelism=4), 16),
+        driver_loop("exp_pbt_16", quad, _hpo(16, Pbt(population=4), seed=42, parallelism=4), 16),
+    ]
+
+
+def roster() -> list[Entry]:
+    """Every bench row, in run (and artifact) order. Imports fail loudly."""
+    from maggy_spark import registry
+    from maggy_spark.functions import dedup, similarity, text
+
+    mods = [importlib.import_module(f"maggy_spark.{m}") for m in (
+        "functions.similarity", "functions.pipeline", "functions.dedup", "functions.text",
+        "functions.multimodal", "operators.events", "operators.warehouse",
+        "operators.aggregations", "operators.generators", "sources.csvsrc", "sources.jsonl")]
+    found = {n: getattr(m, n) for m in mods for n in EXTRAS if hasattr(m, n)}
+    qs = registry.queries()
+    pl13, ann14 = _op(qs.pop("pl13_full_corpus_build")), _op(similarity.ann14_recall_eval)
+    snapshot = functools.cache(lambda: f"{tempfile.mkdtemp(prefix='dd20_snap_')}/star_map.parquet")
+
+    def dd20_snapshot(spark, sf_dir, _prev):
+        # the per-snapshot store pass, INCLUDING the star map's parquet write
+        dedup.dd20_store_star_map(spark, sf_dir).write.mode("overwrite").parquet(snapshot())
+
+    def dd20_store(spark, sf_dir):
+        # the long-lived signatures store a refresh never re-signs
+        if not Path(snapshot()).exists():  # dd20_refresh selected alone
+            dd20_snapshot(spark, sf_dir, None)
+        _noop(dedup.simhash_band_relation(spark, sf_dir)[0])
+
+    return [
+        *(Entry((name,), (_op(fn),)) for name, fn in qs.items()),
+        # r14 split: the warm re-run isolates ledger drift from the
+        # per-rep seam rebuild that dominates the cold wall
+        Entry(("pl13_full_corpus_build", "pl13_ledger_warm_seams"), (pl13, pl13)),
+        Entry(("bpe_train_20", "bpe_encode"), (
+            lambda spark, sf_dir, _prev: text.bpe_train(spark, sf_dir, n_merges=20),
+            lambda spark, sf_dir, merges: _noop(text.bpe_encode(spark, sf_dir, merges)),
+        )),
+        Entry(("ann10_kmeans", "ann11_semdedup"),
+              (_op(similarity.ann10_kmeans_assign), _op(similarity.ann11_semdedup_prune))),
+        *(Entry((name,), (_op(found[name]),)) for name in EXTRAS),  # KeyError: one missing
+        # r15 split: the warm re-run prices serving without four stack builds
+        Entry(("ann14_recall_eval", "ann14_serving_warm"), (ann14, ann14)),
+        Entry(("dd20_snapshot_build",), (dd20_snapshot,)),
+        Entry(("dd20_refresh",), (
+            lambda spark, sf_dir, _prev: _noop(dedup.dd20_refresh(spark, sf_dir, snapshot())),
+        ), "warm-store", dd20_store),
+        *_exp_rows(),
+    ]
+
+
+def operators() -> dict[str, Callable]:
+    """The roster's DataFrame operators, by row name and function name."""
+    ops = [(row, s.op) for e in roster() for row, s in zip(e.rows, e.steps) if hasattr(s, "op")]
+    return {**{fn.__name__: fn for _, fn in ops}, **dict(ops)}
+
+
+def select(entries: list[Entry], rows: list[str] | None) -> list[Entry]:
+    """The entries holding any of `rows` (all when None), whole."""
+    if rows is None:
+        return entries
+    unknown = set(rows) - {r for e in entries for r in e.rows}
+    if unknown:
+        raise SystemExit(f"unknown bench rows: {sorted(unknown)}")
+    return [e for e in entries if set(rows) & set(e.rows)]
+
+
+def _noisy(samples: list[float]) -> bool:
+    spread = max(samples) - min(samples)
+    return spread > 0.5 * statistics.median(samples) and spread > 0.25
+
+
+def time_entry(spark, sf_dir: str, entry: Entry, reps: int, max_reps: int):
+    """Per-row samples of one entry, and the exception that stopped it."""
+    samples: dict[str, list[float]] = {row: [] for row in entry.rows}
+    first = samples[entry.rows[0]]
+    try:
+        if entry.policy == "warm-store":
+            # drop the blocks the previous entry left, keep the session
+            # memo: dd20_refresh's setup reuses the counts its snapshot memoized
+            spark.catalog.clearCache()
+            if entry.setup is not None:
+                spark.sparkContext.setJobGroup(f"bench:{entry.rows[0]}:setup", "untimed setup")
+                entry.setup(spark, sf_dir)
+        while len(first) < reps or (len(first) < max_reps and _noisy(first)):
+            if entry.policy == "cold":
+                _rep_reset(spark)
+            prev, rep = None, len(first)
+            for row, step in zip(entry.rows, entry.steps):
+                spark.sparkContext.setJobGroup(f"bench:{row}", f"bench:{row} rep {rep}")
+                t0 = _tick(spark)
+                prev = step(spark, sf_dir, prev)
+                samples[row].append(time.time() - t0)
+                if isinstance(prev, dict):
+                    for derived, value in prev.items():
+                        samples[derived].append(value)
+    except Exception as e:  # a failed entry must not hide the rest
+        _rep_reset(spark)
+        return samples, e
+    return samples, None
+
+
+def run(spark, sf_dir: str, entries: list[Entry], reps: int, max_reps: int):
+    """Median, spread and partial-rep count per row. A failed entry keeps
+    every row visible: -1.0, or the median of the reps it finished."""
+    timings, spreads, partials = {}, {}, {}
+    for entry in entries:
+        samples, err = time_entry(spark, sf_dir, entry, reps, max_reps)
+        for row, s in samples.items():
+            timings[row] = round(statistics.median(s), 3) if s else -1.0
+            if s:
+                spreads[row] = round(max(s) - min(s), 3)
+            if s and err is not None:
+                partials[row] = len(s)
+        if err is not None:
+            print(f"BENCH ERROR {','.join(entry.rows)}: {err}", file=sys.stderr)
+    return timings, spreads, partials
+
 
 def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__,
+                                 formatter_class=argparse.RawDescriptionHelpFormatter)
+    ap.add_argument("--rows", type=lambda s: s.split(","), help="comma-separated row names")
+    args = ap.parse_args()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
+    reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
+    max_reps = max(reps, int(os.environ.get("SPARK_GRAFT_BENCH_MAX_REPS", "5")))
+    entries = select(roster(), args.rows)
 
     from pyspark.sql import SparkSession
 
@@ -55,627 +300,33 @@ def main() -> None:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-
-    from maggy_spark import registry
-
-    # warm up the JVM / codegen / parquet-footer paths so the first
-    # measured query isn't charged for session startup
+    # warm the JVM / codegen / parquet-footer paths, and the Python/Arrow
+    # worker pool (~100 ms spin-up per worker), so the first measured
+    # rows are not charged for session startup
     spark.read.parquet(f"{sf_dir}/region.parquet").count()
     spark.range(1_000).selectExpr("sum(id)").collect()
-    # warm the Python/Arrow worker pool (one worker per core): the
-    # first mapInPandas job in a session pays ~100ms interpreter
-    # spin-up per worker, which would otherwise be charged to the
-    # first Pandas-UDF query instead of the query itself
-    spark.range(256).repartition(int(cpus)).mapInPandas(
-        lambda it: it, "id long"
-    ).write.format("noop").mode("overwrite").save()
+    _noop(spark.range(256).repartition(int(cpus)).mapInPandas(lambda it: it, "id long"))
 
-    def _tick() -> float:
-        # collect BEFORE starting the clock (see module docstring):
-        # the rep measures the operator, not the GC debt of however
-        # many queries happened to run before it in the suite
-        spark._jvm.System.gc()
-        return time.time()
-
-    from maggy_spark.plans.fixtures import invalidate_session_cache as _invalidate
-
-    def _rep_reset() -> None:
-        # r15 rep boundary (VERDICT r14 item 3): clearCache drops
-        # persisted BLOCKS but leaves the session-cache dict's handles
-        # and the memoized corpus counts (plain Python ints) behind —
-        # so reps 2+ of a row could skip a count job by type accident.
-        # A rep boundary must leave no session-scoped state of ANY
-        # type; pinned by tests/test_review_fixes.py::
-        # test_rep_boundary_leaves_no_session_state.
-        _invalidate(spark)
-        spark.catalog.clearCache()
-
-    reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
-    max_reps = max(reps, int(os.environ.get("SPARK_GRAFT_BENCH_MAX_REPS", "5")))
-    qs = registry.queries()
-    timings: dict[str, float] = {}
-    spreads: dict[str, float] = {}
-    partials: dict[str, int] = {}  # name -> reps that succeeded before a failure
-    for name, fn in qs.items():
-        if name == "pl13_full_corpus_build":
-            continue  # timed below with cold seams (invalidate_session_cache)
-        samples: list[float] = []
-        try:
-            while len(samples) < reps or (
-                # adaptive: a query whose samples still span >50% of
-                # the median is load-noise dominated — buy extra reps
-                # for it alone so the reported median stabilizes
-                len(samples) < max_reps
-                and (max(samples) - min(samples)) > 0.5 * statistics.median(samples)
-                and (max(samples) - min(samples)) > 0.25
-            ):
-                t0 = _tick()
-                df = fn(spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                samples.append(time.time() - t0)
-                _rep_reset()  # drop per-query persists + session memos
-            timings[name] = round(statistics.median(samples), 3)
-            spreads[name] = round(max(samples) - min(samples), 3)
-        except Exception as e:  # a failed query must not hide the rest
-            if samples:  # a transient late-rep failure: the earlier
-                # successful measurements are still the real signal —
-                # but the failure must stay visible to JSON consumers,
-                # not only on stderr
-                timings[name] = round(statistics.median(samples), 3)
-                spreads[name] = round(max(samples) - min(samples), 3)
-                partials[name] = len(samples)
-                print(f"BENCH PARTIAL {name} ({len(samples)} reps): {e}", file=sys.stderr)
-            else:
-                timings[name] = -1.0
-                print(f"BENCH ERROR {name}: {e}", file=sys.stderr)
-            _rep_reset()
-
-    # the composed end-to-end corpus build (pl13, a gate row since
-    # round 8) is benched separately from the registry loop: each rep
-    # pays the FULL pipeline including rebuilding its session-cached
-    # seams (clearCache drops them) — the honest corpus-build wall
-    try:
-        from maggy_spark.functions.pipeline import pl13_full_corpus_build
-        from maggy_spark.plans.fixtures import invalidate_session_cache
-
-        samples = []
-        lw_samples = []
-        for _ in range(reps):
-            invalidate_session_cache(spark)
-            t0 = _tick()
-            pl13_full_corpus_build(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            samples.append(time.time() - t0)
-            # r14 split row (OPTIMIZATION_r14.md): the cold sample above
-            # is dominated by the per-rep seam rebuild (signing + star
-            # loop + shingles ≈ 70% of the wall at sf0.1), so ledger-side
-            # drift is invisible in it. Re-time the SAME query while this
-            # rep's seams are still warm (the dd20_refresh convention: a
-            # production deployment amortizes the seam builds as
-            # persisted stores) so the two rows attribute drift to seam
-            # vs ledger. The warm rep reads relations its own cold rep
-            # built seconds earlier — no cross-run persistence.
-            t0 = _tick()
-            pl13_full_corpus_build(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            lw_samples.append(time.time() - t0)
-            spark.catalog.clearCache()
-        timings["pl13_full_corpus_build"] = round(statistics.median(samples), 3)
-        spreads["pl13_full_corpus_build"] = round(max(samples) - min(samples), 3)
-        timings["pl13_ledger_warm_seams"] = round(statistics.median(lw_samples), 3)
-        spreads["pl13_ledger_warm_seams"] = round(max(lw_samples) - min(lw_samples), 3)
-    except Exception as e:  # noqa: BLE001
-        timings["pl13_full_corpus_build"] = -1.0
-        print(f"BENCH ERROR pl13_full_corpus_build: {e}", file=sys.stderr)
-        spark.catalog.clearCache()
-
-    # the full distributed BPE loop (not a registry row: bpe_train
-    # returns the merge list, not a DataFrame): train pays the whole
-    # 20-round vocab-collapse loop per rep, encode the mapInPandas
-    # rank-priority pass with a fresh session cache (clearCache drops
-    # the shared unigram relation between reps, so train is honest
-    # end-to-end including its one corpus scan)
-    try:
-        from maggy_spark.functions.text import bpe_encode, bpe_train
-
-        tr_samples, en_samples = [], []
-        for _ in range(reps):
-            t0 = _tick()
-            merges = bpe_train(spark, sf_dir, n_merges=20)
-            tr_samples.append(time.time() - t0)
-            t0 = _tick()
-            bpe_encode(spark, sf_dir, merges).write.format("noop").mode("overwrite").save()
-            en_samples.append(time.time() - t0)
-            _rep_reset()
-        timings["bpe_train_20"] = round(statistics.median(tr_samples), 3)
-        spreads["bpe_train_20"] = round(max(tr_samples) - min(tr_samples), 3)
-        timings["bpe_encode"] = round(statistics.median(en_samples), 3)
-        spreads["bpe_encode"] = round(max(en_samples) - min(en_samples), 3)
-        # BASELINE.md pin (r11): the JVM fold path's fixed cost puts
-        # the sf0.1 median at ~2 s; drift above 3 s is a regression
-        # signal, not noise — flag it loudly in the artifact of record
-        if 0 < sf <= 0.11 and timings["bpe_encode"] > 3.0:  # sf=-1 = unknown scale: no pin
-            print(
-                f"BENCH WARN bpe_encode median {timings['bpe_encode']:.2f}s "
-                "exceeds the 3s BASELINE.md pin",
-                file=sys.stderr,
-            )
-    except Exception as e:  # noqa: BLE001
-        timings["bpe_train_20"] = -1.0
-        print(f"BENCH ERROR bpe loop: {e}", file=sys.stderr)
-        spark.catalog.clearCache()
-
-    # ann9 PQ/ADC — the 32x-compression serving rung at the top of
-    # the compression ladder. A registry/gate row since r11 (ann7
-    # moved to the offline suite); benched explicitly so the ladder
-    # has a round-over-round regression signal (VERDICT r10 item 2,
-    # comment refreshed per ADVICE r11). Each
-    # rep pays the full codebook build + code store + ADC scan + exact
-    # rerank (clearCache drops the session-cached codebook relation).
-    try:
-        from maggy_spark.functions.similarity import ann9_pq_adc
-
-        samples = []
-        for _ in range(reps):
-            t0 = _tick()
-            ann9_pq_adc(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            samples.append(time.time() - t0)
-            _rep_reset()
-        timings["ann9_pq_adc"] = round(statistics.median(samples), 3)
-        spreads["ann9_pq_adc"] = round(max(samples) - min(samples), 3)
-    except Exception as e:  # noqa: BLE001
-        timings["ann9_pq_adc"] = -1.0
-        print(f"BENCH ERROR ann9_pq_adc: {e}", file=sys.stderr)
-        spark.catalog.clearCache()
-
-    # ann10/ann11 — the oracle-checkable Lloyd trainer and the
-    # SemDeDup pruner over its clusters (new r11, offline-oracled).
-    # Per rep: ann10 pays the FULL pipeline (corpus scan + seeds +
-    # KM_ITERS decimal updates + final assignment — clearCache drops
-    # the session-cached relations), then ann11 prices only its
-    # incremental pair/prune stage on top of the still-cached
-    # assignment — the seam split that keeps drift attributable.
-    try:
-        from maggy_spark.functions.similarity import (
-            ann10_kmeans_assign,
-            ann11_semdedup_prune,
-        )
-        from maggy_spark.plans.fixtures import invalidate_session_cache
-
-        km_samples, sd_samples = [], []
-        for _ in range(reps):
-            # clearCache alone is NOT enough here: the trained
-            # centroids live behind a localCheckpoint, so the
-            # session-cached assignment would rebuild from the
-            # checkpoint RDD and reps 2+ would skip training — the
-            # pl13 discipline (invalidate + rebuild per rep) keeps
-            # the row honest about the full train cost
-            invalidate_session_cache(spark, sf_dir)
-            t0 = _tick()
-            ann10_kmeans_assign(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            km_samples.append(time.time() - t0)
-            t0 = _tick()
-            ann11_semdedup_prune(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            sd_samples.append(time.time() - t0)
-            spark.catalog.clearCache()
-        timings["ann10_kmeans"] = round(statistics.median(km_samples), 3)
-        spreads["ann10_kmeans"] = round(max(km_samples) - min(km_samples), 3)
-        timings["ann11_semdedup"] = round(statistics.median(sd_samples), 3)
-        spreads["ann11_semdedup"] = round(max(sd_samples) - min(sd_samples), 3)
-    except Exception as e:  # noqa: BLE001
-        timings["ann10_kmeans"] = -1.0
-        print(f"BENCH ERROR ann10/ann11: {e}", file=sys.stderr)
-        spark.catalog.clearCache()
-
-    # r12 additions — the three new offline-oracled operators get a
-    # round-over-round regression signal before their pre-declared
-    # rotations: ann12 (IVFPQ probed-list serving; full codebook +
-    # code store + probes + ADC + rerank per rep), pl16 (the
-    # data-constrained repeat schedule; one 2-group corpus agg), dd18
-    # (dd7's banded candidates embedding-verified; pays the SimHash
-    # signing + both id joins — clearCache drops the bands cache).
-    # late-r12 additions: tx16 (exact length quantiles — one bounded
-    # histogram + tiny windows), pl17 (two-phase prefix-sum shard
-    # manifest), ann13 (cluster diagnostics; clearCache drops the
-    # session-cached model, so each rep prices the FULL k-means
-    # retrain + the k x k separation pass — the ann10 discipline).
-    try:
-        from maggy_spark.functions.dedup import dd18_crossmodal_verify, dd19_containment_screen
-        from maggy_spark.functions.multimodal import mm1_decode_metadata, mm9_multimodal_pack_plan
-        from maggy_spark.functions.pipeline import (
-            pl14_curriculum_order,
-            pl18_temperature_mix,
-            pl19_temperature_apply,
-            pl1_corpus_prep,
-            pl23_weighted_sample,
-        )
-        from maggy_spark.operators.events import (
-            ev12_lag_quantiles,
-            ev13_type_transitions,
-            ev14_session_funnel,
-        )
-        from maggy_spark.operators.warehouse import k5_late_shipment_priority
-        from maggy_spark.functions.similarity import (
-            ann13_cluster_quality,
-            ann14_recall_eval,
-            ann15_cluster_keywords,
-            ann3_ivf_topk,
-        )
-        from maggy_spark.functions.text import (
-            tx17_tfidf_keywords,
-            tx18_langid_eval,
-            tx1_token_count,
-            tx5_ngram_stats,
-        )
-        from maggy_spark.functions.dedup import (
-            dd21_lsh_s_curve,
-            dd22_minhash_calibration,
-            dd23_contamination_report,
-        )
-        from maggy_spark.functions.pipeline import (
-            pl20_pack_efficiency,
-            pl21_fair_interleave,
-            pl22_pps_sample,
-            pl24_doremi_reweight,
-        )
-        from maggy_spark.functions.similarity import (
-            ann17_filtered_topk,
-            ann18_range_search,
-            ann19_filtered_ivf,
-            ann20_selective_filtered_ivf,
-            ann21_routing_recall_curve,
-            ann22_incremental_store,
-        )
-        from maggy_spark.functions.text import tx20_tokenizer_fertility
-        from maggy_spark.operators.aggregations import (
-            a13_regret_curve,
-            a14_param_importance,
-            a15_earlystop_savings,
-        )
-        from maggy_spark.operators.generators import g14_pbt_schedule
-        from maggy_spark.sources.csvsrc import s11_csv_clean, s11_csv_report
-        from maggy_spark.sources.jsonl import s10_jsonl_clean, s10_jsonl_report
-
-        # r13 rotation bookkeeping: ann12/pl16/tx19/ann16 moved INTO the
-        # registry (timed by the registry loop above), and the four
-        # rotated-out ops take their extras slots so the measured row
-        # set — and therefore the round-over-round shared-row
-        # comparison — stays identical to r12.
-        # r14 rotation bookkeeping: pl17/tx16 moved INTO the registry;
-        # the rotated-out pl1/tx1 take their extras slots (same
-        # row-set-preserving convention).
-        for name, fn in (
-            ("ann3_ivf_topk", ann3_ivf_topk),
-            ("pl14_curriculum_order", pl14_curriculum_order),
-            ("dd18_crossmodal_verify", dd18_crossmodal_verify),
-            ("tx1_token_count", tx1_token_count),
-            ("pl1_corpus_prep", pl1_corpus_prep),
-            ("ann13_cluster_quality", ann13_cluster_quality),
-            ("dd19_containment_screen", dd19_containment_screen),
-            ("ev12_lag_quantiles", ev12_lag_quantiles),
-            ("tx17_tfidf_keywords", tx17_tfidf_keywords),
-            ("ann15_cluster_keywords", ann15_cluster_keywords),
-            ("tx18_langid_eval", tx18_langid_eval),
-            ("tx5_ngram_stats", tx5_ngram_stats),
-            ("mm1_decode_metadata", mm1_decode_metadata),
-            ("pl18_temperature_mix", pl18_temperature_mix),
-            ("ev13_type_transitions", ev13_type_transitions),
-            ("ev14_session_funnel", ev14_session_funnel),
-            ("pl19_temperature_apply", pl19_temperature_apply),
-            ("k5_late_shipment_priority", k5_late_shipment_priority),
-            # r13: the S10 JSONL ingest surfaces (fixture written once
-            # by ensure_s10_fixture; reps measure the PERMISSIVE scan
-            # + split/report, not the fixture build)
-            ("s10_jsonl_clean", s10_jsonl_clean),
-            ("s10_jsonl_report", s10_jsonl_report),
-            # r14: the S11 CSV ingest surfaces (same fixture-once,
-            # measure-the-scan convention as S10)
-            ("s11_csv_clean", s11_csv_clean),
-            ("s11_csv_report", s11_csv_report),
-            # r13: the LSH banding S-curve planner (scan-free matrix)
-            ("dd21_lsh_s_curve", dd21_lsh_s_curve),
-            # r13: the pack-efficiency audit + tokenizer fertility table
-            ("pl20_pack_efficiency", pl20_pack_efficiency),
-            ("tx20_tokenizer_fertility", tx20_tokenizer_fertility),
-            # r13: the remaining vector-store serving patterns
-            ("ann17_filtered_topk", ann17_filtered_topk),
-            ("ann18_range_search", ann18_range_search),
-            ("pl21_fair_interleave", pl21_fair_interleave),
-            ("dd22_minhash_calibration", dd22_minhash_calibration),
-            ("dd23_contamination_report", dd23_contamination_report),
-            ("pl22_pps_sample", pl22_pps_sample),
-            ("a13_regret_curve", a13_regret_curve),
-            ("a14_param_importance", a14_param_importance),
-            ("a15_earlystop_savings", a15_earlystop_savings),
-            ("mm9_multimodal_pack_plan", mm9_multimodal_pack_plan),
-            ("pl23_weighted_sample", pl23_weighted_sample),
-            ("g14_pbt_schedule", g14_pbt_schedule),
-            ("ann19_filtered_ivf", ann19_filtered_ivf),
-            # r14: the non-aligned filtered IVF (histogram-planned
-            # nprobe); each rep pays the full store + histogram build
-            # (clearCache drops the session-cached SQ corpus)
-            ("ann20_selective_filtered_ivf", ann20_selective_filtered_ivf),
-            ("ann21_routing_recall_curve", ann21_routing_recall_curve),
-            # r14: the DoReMi reweighting step; each rep re-prices the
-            # shared tx19 LM relation cold (clearCache drops it)
-            ("pl24_doremi_reweight", pl24_doremi_reweight),
-            # r14: the incremental IVF store (in-plan form: model
-            # derivation + full-corpus assign + quantize + payload)
-            ("ann22_incremental_store", ann22_incremental_store),
-        ):
-            # per-operator guard: one failure records -1.0 under ITS
-            # OWN name and the rest of the roster still runs (an
-            # unguarded loop would abort everything after the failure
-            # point and misattribute the error to a fixed row)
-            try:
-                samples = []
-                for _ in range(reps):
-                    t0 = _tick()
-                    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                    samples.append(time.time() - t0)
-                    _rep_reset()
-                timings[name] = round(statistics.median(samples), 3)
-                spreads[name] = round(max(samples) - min(samples), 3)
-            except Exception as e:  # noqa: BLE001
-                timings[name] = -1.0
-                print(f"BENCH ERROR {name}: {e}", file=sys.stderr)
-                _rep_reset()
-    except Exception as e:  # noqa: BLE001
-        timings["extras_import"] = -1.0
-        print(f"BENCH ERROR extras import: {e}", file=sys.stderr)
-        spark.catalog.clearCache()
-
-    # ann14 attribution split (r15, VERDICT r14 item 8): the cold row
-    # prices FOUR serving stacks' builds per rep BY DESIGN, which masks
-    # serving-path drift behind ~6 s of cold-build wall. Additive row
-    # ann14_serving_warm re-times the SAME eval while its own rep's
-    # session seams (exact truth, routing model, SQ/PQ stores) are
-    # still warm — the pl13_ledger_warm_seams convention. The cold
-    # row's methodology is unchanged (cold per rep, reset after); the
-    # warm rep reads relations its own cold rep built seconds earlier,
-    # no cross-run persistence.
-    try:
-        from maggy_spark.functions.similarity import ann14_recall_eval
-
-        cold_samples, warm_samples = [], []
-        for _ in range(reps):
-            t0 = _tick()
-            ann14_recall_eval(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            cold_samples.append(time.time() - t0)
-            t0 = _tick()
-            ann14_recall_eval(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            warm_samples.append(time.time() - t0)
-            _rep_reset()
-        timings["ann14_recall_eval"] = round(statistics.median(cold_samples), 3)
-        spreads["ann14_recall_eval"] = round(max(cold_samples) - min(cold_samples), 3)
-        timings["ann14_serving_warm"] = round(statistics.median(warm_samples), 3)
-        spreads["ann14_serving_warm"] = round(max(warm_samples) - min(warm_samples), 3)
-    except Exception as e:  # noqa: BLE001
-        timings["ann14_recall_eval"] = -1.0
-        print(f"BENCH ERROR ann14 split: {e}", file=sys.stderr)
-        _rep_reset()
-
-    # dd20 split (VERDICT r12 item 3): the old single row was ~90%
-    # previous-snapshot SIMULATION (a store-internal pair sweep a real
-    # deployment ran once, at snapshot time), so drift on the actual
-    # ingest path was unmeasurable. Two rows now:
-    # - dd20_snapshot_build prices that one-time store pass INCLUDING
-    #   the parquet write of the star map (what a deployment pays per
-    #   snapshot), fully cold per rep (clearCache) like the old row.
-    # - dd20_refresh prices the production per-batch path — dd11's
-    #   delta probe + one map+delta contraction — reading the
-    #   PERSISTED snapshot fixture, with the signatures/band store
-    #   WARM (in production it is a long-lived persisted table; a
-    #   refresh never re-signs the landed corpus). The delta's own
-    #   signing rides inside the warm relation here, which overstates
-    #   nothing: the fixture delta is 10% of the corpus.
-    try:
-        import tempfile
-
-        from maggy_spark.functions.dedup import (
-            dd20_refresh,
-            dd20_store_star_map,
-            simhash_band_relation,
-        )
-
-        snap_root = tempfile.mkdtemp(prefix="dd20_snap_")
-        snap = f"{snap_root}/star_map.parquet"
-        sb_samples = []
-        for _ in range(reps):
-            _rep_reset()
-            t0 = _tick()
-            dd20_store_star_map(spark, sf_dir).write.mode("overwrite").parquet(snap)
-            sb_samples.append(time.time() - t0)
-        timings["dd20_snapshot_build"] = round(statistics.median(sb_samples), 3)
-        spreads["dd20_snapshot_build"] = round(max(sb_samples) - min(sb_samples), 3)
-
-        spark.catalog.clearCache()
-        # warm the long-lived signatures store once, untimed
-        bands, _b, _t = simhash_band_relation(spark, sf_dir)
-        bands.write.format("noop").mode("overwrite").save()
-        rf_samples = []
-        for _ in range(reps):
-            t0 = _tick()
-            dd20_refresh(spark, sf_dir, snap).write.format("noop").mode("overwrite").save()
-            rf_samples.append(time.time() - t0)
-        timings["dd20_refresh"] = round(statistics.median(rf_samples), 3)
-        spreads["dd20_refresh"] = round(max(rf_samples) - min(rf_samples), 3)
-        spark.catalog.clearCache()
-    except Exception as e:  # noqa: BLE001
-        timings["dd20_refresh"] = -1.0
-        print(f"BENCH ERROR dd20 split: {e}", file=sys.stderr)
-        spark.catalog.clearCache()
-
-    # experiment-level targets from BASELINE.md §3: 16-trial no-op
-    # random search wall time (target <= 35 s) and median per-trial
-    # scheduling overhead (target <= 2 s). The trial fn returns
-    # time.time() as its metric so the summary's worst_val/best_val
-    # are the FIRST/LAST trial-function entry instants — which splits
-    # the overhead into a submit->first-task component (driver fan-out
-    # latency) and a last-task->result component (result collection +
-    # aggregation), making any round-over-round drift attributable.
-    try:
-        from maggy_spark import Searchspace, lagom
-        from maggy_spark.config import HyperparameterOptConfig
-
-        def _clock(x):
-            import time as _t
-
-            return _t.time()
-
-        cfg = HyperparameterOptConfig(
-            num_trials=16, optimizer="randomsearch",
-            searchspace=Searchspace(x=("DOUBLE", [0.0, 1.0])),
-            direction="max", es_policy="none", seed=42, parallelism=4,
-        )
-        lagom(_clock, HyperparameterOptConfig(
-            num_trials=1, optimizer="randomsearch",
-            searchspace=Searchspace(x=("DOUBLE", [0.0, 1.0])),
-            direction="max", es_policy="none", seed=1,
-        ), spark)  # warm python workers
-        exp_samples, sub_samples, tail_samples = [], [], []
-        for _ in range(reps):
-            t0 = _tick()
-            res = lagom(_clock, cfg, spark)
-            t1 = time.time()
-            exp_samples.append(t1 - t0)
-            # direction=max: worst_val = earliest fn entry, best_val =
-            # latest (the fn body is instantaneous, so entry ~= exit).
-            # SINGLE-MACHINE ASSUMPTION: these subtract executor-side
-            # time.time() from driver-side t0/t1, valid only because
-            # local mode shares one clock. On a real cluster, derive
-            # the split from driver-side listener events instead. The
-            # max(0, .) clamp keeps residual skew from going negative.
-            sub_samples.append(max(0.0, res["worst_val"] - t0))
-            tail_samples.append(max(0.0, t1 - res["best_val"]))
-        timings["exp_random16_noop"] = round(statistics.median(exp_samples), 3)
-        # median per-trial overhead: wall / trials-per-slot for a no-op fn
-        timings["exp_per_trial_overhead"] = round(timings["exp_random16_noop"] / (16 / 4), 3)
-        timings["exp_submit_to_first_task"] = round(statistics.median(sub_samples), 3)
-        timings["exp_last_task_to_result"] = round(statistics.median(tail_samples), 3)
-    except Exception as e:  # noqa: BLE001
-        print(f"BENCH ERROR experiment metrics: {e}", file=sys.stderr)
-
-    # the reference's FLAGSHIP driver loops (VERDICT r9 item 5):
-    # exp_random16_noop covers the wave scheduler, but neither the
-    # Hyperband pruner loop (reference optimization_driver.py:87-89 +
-    # pruner/hyperband.py) nor the GP-BO suggest loop
-    # (optimization_driver.py:59-117) had an end-to-end bench row.
-    # Both trial fns are near-noop so the rows time DRIVER MACHINERY
-    # (rung promotion / GP fit + EI argmax per suggestion), held to
-    # the same <=2 s/trial budget as the scheduler row.
-    try:
-        from maggy_spark import Searchspace, lagom
-        from maggy_spark.config import HyperparameterOptConfig
-
-        def _hb_fn(x, budget, reporter):
-            val = -((x - 0.3) ** 2)
-            for step in range(int(budget)):
-                reporter.broadcast(val * (step + 1) / budget, step)
-            return val
-
-        hb_cfg = HyperparameterOptConfig(
-            num_trials=3,  # overridden by the pruner's ladder (17 trials)
-            optimizer="randomsearch",
-            searchspace=Searchspace(x=("DOUBLE", [0.0, 1.0])),
-            direction="max", es_policy="none", seed=42, parallelism=4,
-            pruner="hyperband",
-            pruner_kwargs={"min_budget": 1, "max_budget": 9, "eta": 3, "n_iterations": 2},
-        )
-        hb_samples = []
-        for _ in range(reps):
-            t0 = _tick()
-            res = lagom(_hb_fn, hb_cfg, spark)
-            hb_samples.append(time.time() - t0)
-            assert res["num_trials"] == 17
-        timings["exp_hyperband_noop"] = round(statistics.median(hb_samples), 3)
-        spreads["exp_hyperband_noop"] = round(max(hb_samples) - min(hb_samples), 3)
-
-        def _gp_fn(x):
-            return -((x - 0.3) ** 2)
-
-        gp_cfg = HyperparameterOptConfig(
-            num_trials=16, optimizer="gp",
-            searchspace=Searchspace(x=("DOUBLE", [0.0, 1.0])),
-            direction="max", es_policy="none", seed=42, parallelism=4,
-        )
-        gp_samples = []
-        for _ in range(reps):
-            t0 = _tick()
-            res = lagom(_gp_fn, gp_cfg, spark)
-            gp_samples.append(time.time() - t0)
-            assert res["num_trials"] == 16
-        timings["exp_gp_bo_16"] = round(statistics.median(gp_samples), 3)
-        spreads["exp_gp_bo_16"] = round(max(gp_samples) - min(gp_samples), 3)
-
-        # r14: the PBT controller loop (4 generations x population 4,
-        # generation-synchronous exploit/explore) — same near-noop fn
-        # and <=2 s/trial budget as the other driver loops
-        from maggy_spark.optimizers import Pbt
-
-        pbt_cfg = HyperparameterOptConfig(
-            num_trials=16, optimizer=Pbt(population=4),
-            searchspace=Searchspace(x=("DOUBLE", [0.0, 1.0])),
-            direction="max", es_policy="none", seed=42, parallelism=4,
-        )
-        pbt_samples = []
-        for _ in range(reps):
-            t0 = _tick()
-            res = lagom(_gp_fn, pbt_cfg, spark)
-            pbt_samples.append(time.time() - t0)
-            assert res["num_trials"] == 16
-        timings["exp_pbt_16"] = round(statistics.median(pbt_samples), 3)
-        spreads["exp_pbt_16"] = round(max(pbt_samples) - min(pbt_samples), 3)
-    except Exception as e:  # noqa: BLE001
-        print(f"BENCH ERROR driver-loop metrics: {e}", file=sys.stderr)
-
-    # headline total counts only FULLY-measured queries: a partial
-    # (crashed-after-rep-1) or errored query must shrink measured
-    # coverage, not fold a possibly-bogus sample into the number the
-    # regression gate compares round over round. Every key DERIVED
-    # from exp_random16_noop (the r8 submit/tail components AND the
-    # per-trial quotient) is excluded — exp_random16_noop is already
-    # summed, so adding any decomposition of it would double-count
-    # the same wall time
-    components = {
-        "exp_submit_to_first_task",
-        "exp_last_task_to_result",
-        "exp_per_trial_overhead",
-    }
-    total = round(
-        sum(v for k, v in timings.items() if v >= 0 and k not in partials and k not in components),
-        3,
-    )
-    payload = {
-        "metric": "operator_suite_total",
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "rep_spread": spreads,
-        "partial": partials,
-        "n_partial": len(partials),
-        "reps": reps,
-        "sf": sf,
-        "n_queries": len(timings),
-        "cpus": int(cpus),
-    }
-    # the full record (medians + rep spreads + partials) is the
-    # artifact of record, persisted locally (BASELINE.md §4)
-    (REPO / "BENCH_local.json").write_text(json.dumps(payload) + "\n")
-    # stdout gets a MEDIANS-ONLY line: the driver keeps only the
-    # stdout tail of this process and the full dict has truncated
-    # mid-line every round since r5 (BENCH_r{5..8} all parsed: null).
-    # Dropping rep_spread/partial detail halves the line so the
-    # driver's BENCH_r{N}.json capture finally parses; spreads stay in
-    # BENCH_local.json.
-    # r15 (VERDICT r14 item 2): compact separators — the driver keeps
-    # only the stdout TAIL of this process and BENCH_r13's spaced line
-    # outgrew it and failed to parse; no-space separators cut ~0.5 KB
-    # at 109 rows and this stays the LAST line printed. The full
-    # record (spreads, partials) lives in BENCH_local.json above.
-    line = json.dumps(
-        {k: v for k, v in payload.items() if k not in ("rep_spread", "partial")},
-        separators=(",", ":"),
-    )
-    print(line, flush=True)
+    timings, spreads, partials = run(spark, sf_dir, entries, reps, max_reps)
+    # BASELINE.md pin (r11): bpe_encode's sf0.1 median is ~2 s; above 3 s
+    # is a regression signal, not noise (sf=-1 = unknown scale: no pin)
+    if 0 < sf <= 0.11 and timings.get("bpe_encode", 0) > 3.0:
+        print(f"BENCH WARN bpe_encode median {timings['bpe_encode']:.2f}s "
+              "exceeds the 3s BASELINE.md pin", file=sys.stderr)
+    # the headline total counts only fully measured rows: a partial or
+    # errored row must shrink coverage, not fold a suspect sample in
+    total = sum(v for k, v in timings.items() if v >= 0 and k not in partials and k not in COMPONENTS)
+    payload = {"metric": "operator_suite_total", "value": round(total, 3), "unit": "sec",
+               "queries": timings, "rep_spread": spreads, "partial": partials,
+               "n_partial": len(partials), "reps": reps, "sf": sf,
+               "n_queries": len(timings), "cpus": int(cpus)}
+    if args.rows is None:  # a subset run never replaces the record
+        (REPO / "BENCH_local.json").write_text(json.dumps(payload) + "\n")
+    # stdout keeps only the medians, compact, as the LAST line: consumers
+    # read the stdout tail, and the full dict truncated there (r5-r8,
+    # r13); spreads and partials live in BENCH_local.json
+    print(json.dumps({k: v for k, v in payload.items() if k not in ("rep_spread", "partial")},
+                     separators=(",", ":")), flush=True)
 
 
 if __name__ == "__main__":

@@ -21,14 +21,13 @@ def _collect() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame], str 
         warehouse,
     )
 
-    modules = [aggregations, generators, earlystop, transforms, events, warehouse]
-    try:
-        from maggy_spark.functions import dedup, multimodal, pipeline, similarity, text
-        from maggy_spark.streaming import ingest_stream
+    from maggy_spark.functions import dedup, multimodal, pipeline, similarity, text
+    from maggy_spark.streaming import ingest_stream
 
-        modules += [text, dedup, similarity, multimodal, pipeline, ingest_stream]
-    except ImportError:
-        pass
+    # no ImportError guard: a broken import must fail the caller, not
+    # silently drop every functions/ingest operator from the registry
+    modules = [aggregations, generators, earlystop, transforms, events, warehouse]
+    modules += [text, dedup, similarity, multimodal, pipeline, ingest_stream]
 
     reg: dict[str, tuple[Callable, str | None]] = {}
     for mod in modules:
