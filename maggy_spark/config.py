@@ -26,8 +26,8 @@ class BaseConfig:
     log_dir: str | None = None
     # with log_dir set, also append trials/metrics to a live
     # ExperimentStore after every wave, so other Spark sessions can
-    # watch the running experiment relationally (costs one small
-    # write job per wave)
+    # watch the running experiment relationally (each append writes
+    # parquet parts on the driver and runs no Spark job)
     stream_artifacts: bool = False
 
 

@@ -36,6 +36,14 @@ from maggy_spark.trial import Trial
 
 DEC = "decimal(18,4)"
 
+# the `trials` table row shape (FIXTURES.md F2); Trial.to_row produces
+# it, and the live store derives its Arrow schema from it
+TRIALS_SCHEMA = (
+    "trial_id string, seq bigint, params map<string,string>, budget int, "
+    "sample_type string, status string, direction string, final_metric double, "
+    "early_stop boolean, duration_ms bigint"
+)
+
 
 def lagom(
     train_fn: Callable,
@@ -374,8 +382,11 @@ def _drive_async(train_fn, config, spark, controller, parallelism, store=None, e
     trial finishes — the reference's asynchrony
     (`optimization_driver.py:519-541`) without its socket plane.
     Each job runs in the 'maggy' FAIR scheduler pool so concurrent
-    trials share executors fairly (SURVEY.md §7.3b)."""
+    trials share executors fairly (SURVEY.md §7.3b), under the
+    caller's job group."""
     from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
+
+    from pyspark import inheritable_thread_target
 
     all_trials: list[Trial] = []
     seq = 0
@@ -428,9 +439,13 @@ def _drive_async(train_fn, config, spark, controller, parallelism, store=None, e
                     batch = controller.next_batch(1)
                     if not batch:
                         break
+                    # wrapped here, in the driver thread: the trial's jobs
+                    # inherit the caller's job group and local properties
                     in_flight.add(
                         pool.submit(
-                            run_one, batch[0], _stop_source(controller, config, es_refresh_path)
+                            inheritable_thread_target(spark)(run_one),
+                            batch[0],
+                            _stop_source(controller, config, es_refresh_path),
                         )
                     )
                     jobs += 1
@@ -473,12 +488,7 @@ def trials_to_df(spark: SparkSession, trials: list[Trial], direction: str = "max
     (FIXTURES.md F2 schema)."""
     rows = [t.to_row(seq=t.info_dict.get("seq", i), direction=direction, budget=int(t.info_dict.get("budget", 0)))
             for i, t in enumerate(trials)]
-    schema = (
-        "trial_id string, seq bigint, params map<string,string>, budget int, "
-        "sample_type string, status string, direction string, final_metric double, "
-        "early_stop boolean, duration_ms bigint"
-    )
-    return spark.createDataFrame(rows, schema)
+    return spark.createDataFrame(rows, TRIALS_SCHEMA)
 
 
 def summarize_finalized(finalized_df, direction: str) -> dict:
@@ -529,8 +539,8 @@ def _aggregate_result(spark: SparkSession, trials: list[Trial], direction: str) 
     (reference optimization_driver.py:344-406 + prep_results)."""
     if not trials:
         return {"num_trials": 0, "early_stopped": 0}
-    df = trials_to_df(spark, trials, direction).where(F.col("status") == "FINALIZED")
-    if df.isEmpty():
+    if not any(t.status == Trial.FINALIZED for t in trials):
         errs = sum(t.status == Trial.ERROR for t in trials)
         return {"num_trials": len(trials), "errors": errs, "early_stopped": 0}
+    df = trials_to_df(spark, trials, direction).where(F.col("status") == "FINALIZED")
     return summarize_finalized(df, direction)

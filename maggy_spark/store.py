@@ -8,25 +8,36 @@ checks (A1 summary, A4 budget stats, G5 promotions, A8 median bar) —
 so dashboards/other sessions can watch a running experiment with
 plain Spark SQL instead of asking the driver process.
 
-Append-only parquet with one file per wave: cheap atomic appends, no
-compaction needed at experiment scale (thousands of trials, not
-billions of rows). The metric stream reuses the same expressions as
-operators/earlystop.py.
+Append-only parquet with one part file per append, written by pyarrow
+on the driver: an append runs no Spark job, so it never queues behind
+running trial tasks. The part is written under a dot-prefixed name and
+renamed into place; Spark's file index skips dot- and
+underscore-prefixed names, so a concurrent reader sees the old set of
+parts or the new one, never a torn file. The store path must be
+visible to the driver's filesystem (as `os.makedirs` already
+assumes). No compaction is needed at experiment scale (thousands of
+trials, not billions of rows). Reads and queries are Spark SQL; the
+metric stream reuses the same expressions as operators/earlystop.py.
 """
 
 from __future__ import annotations
 
 import os
-import time
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
+from maggy_spark.experiment import TRIALS_SCHEMA
 from maggy_spark.trial import Trial
 
-# the trials row shape lives with its one producer,
-# experiment.trials_to_df (FIXTURES.md F2); this store appends through
-# that function, so there is deliberately no second schema copy here
+# the trials row shape is experiment.TRIALS_SCHEMA (FIXTURES.md F2),
+# shared with trials_to_df; both tables' Arrow schemas derive from the
+# DDL strings, so there is no second schema copy here
 METRICS_SCHEMA = "trial_id string, step bigint, value double"
 
 
@@ -38,26 +49,39 @@ class ExperimentStore:
         self._trials_path = os.path.join(path, "trials")
         self._metrics_path = os.path.join(path, "metrics")
         self._seq_counter: int | None = None
+        self._trials_schema = to_arrow_schema(StructType.fromDDL(TRIALS_SCHEMA))
+        self._metrics_schema = to_arrow_schema(StructType.fromDDL(METRICS_SCHEMA))
         os.makedirs(path, exist_ok=True)
 
     # -- appends -------------------------------------------------------
 
     def _next_seq(self) -> int:
         """Monotone seq across appends AND across store handles: the
-        tie-break key in summaries/promotions must stay unique."""
+        tie-break key in summaries/promotions must stay unique. A
+        reused store whose trials table cannot be read raises rather
+        than restarting at 0 and duplicating tie-break keys."""
         if self._seq_counter is None:
-            try:
-                self._seq_counter = self.trials().count()
-            except Exception:  # noqa: BLE001 - nothing written yet
-                self._seq_counter = 0
+            exists = os.path.isdir(self._trials_path)
+            self._seq_counter = self.trials().count() if exists else 0
         return self._seq_counter
+
+    @staticmethod
+    def _write_part(table_path: str, rows: list, schema: pa.Schema) -> None:
+        """One parquet part per append, renamed into place whole."""
+        os.makedirs(table_path, exist_ok=True)
+        name = f"part-{uuid.uuid4()}.parquet"
+        tmp = os.path.join(table_path, f".{name}.tmp")
+        try:
+            pq.write_table(pa.Table.from_pylist(rows, schema=schema), tmp)
+            os.replace(tmp, os.path.join(table_path, name))
+        finally:
+            if os.path.exists(tmp):
+                os.remove(tmp)
 
     def append_trials(self, trials: list[Trial]) -> None:
         if not trials:
             return
         base = self._next_seq()
-        from maggy_spark.experiment import trials_to_df  # single source of the row shape
-
         # REBASE onto the store's counter rather than setdefault: every
         # real caller presets a 1-based per-run seq, so keeping it
         # verbatim would collide when a second run appends into an
@@ -78,21 +102,21 @@ class ExperimentStore:
         for pos, i in enumerate(order):
             trials[i].info_dict["seq"] = base + pos + 1
         self._seq_counter = base + len(trials)
-        trials_to_df(self.spark, trials, self.direction).coalesce(1).write.mode("append").parquet(
-            self._trials_path
-        )
+        rows = [
+            t.to_row(seq=t.info_dict["seq"], direction=self.direction, budget=int(t.info_dict.get("budget", 0)))
+            for t in trials
+        ]
+        self._write_part(self._trials_path, rows, self._trials_schema)
 
     def append_metrics(self, trials: list[Trial]) -> None:
         rows = [
-            (t.trial_id, int(s), float(v))
+            {"trial_id": t.trial_id, "step": int(s), "value": float(v)}
             for t in trials
             for s, v in zip(t.step_history, t.metric_history, strict=True)
         ]
         if not rows:
             return
-        self.spark.createDataFrame(rows, METRICS_SCHEMA).coalesce(1).write.mode("append").parquet(
-            self._metrics_path
-        )
+        self._write_part(self._metrics_path, rows, self._metrics_schema)
 
     # -- live relations ------------------------------------------------
 

@@ -299,3 +299,29 @@ def test_async_scheduling_also_sinks_full_logs(spark, tmp_path):
     assert len(os.listdir(ldir)) == 3
     for f in os.listdir(ldir):
         assert open(os.path.join(ldir, f)).read().count("\n") == 250
+
+
+def test_aggregate_all_error_trials_runs_no_job(spark, job_group):
+    from maggy_spark.experiment import _aggregate_result
+    from maggy_spark.trial import Trial
+
+    trials = []
+    for i in range(3):
+        t = Trial({"x": i})
+        t.status = Trial.ERROR
+        t.info_dict["seq"] = i + 1
+        trials.append(t)
+    res = _aggregate_result(spark, trials, "max")
+    assert res == {"num_trials": 3, "errors": 3, "early_stopped": 0}
+    assert job_group() == []
+
+
+def test_async_trial_jobs_inherit_job_group(spark, job_group):
+    config = HyperparameterOptConfig(
+        num_trials=8, optimizer="randomsearch", searchspace=Searchspace(**SP),
+        direction="max", es_policy="none", seed=3, parallelism=4, scheduling="async",
+    )
+    res = lagom(lambda x, y: x + y, config, spark)
+    assert res["num_waves"] == 8
+    # one job per trial in the pool threads, plus the driver's aggregate
+    assert len(job_group()) >= 8

@@ -1,9 +1,12 @@
 """ExperimentStore: live relational analytics over a running
 experiment's trials/metrics tables."""
 
+import os
+
 import pytest
 
-from maggy_spark.store import ExperimentStore
+from maggy_spark.experiment import trials_to_df
+from maggy_spark.store import METRICS_SCHEMA, ExperimentStore
 from maggy_spark.trial import Trial
 
 
@@ -165,3 +168,52 @@ def test_append_rebases_preset_seq_across_handles(spark, tmp_path):
     s2.append_trials([_trial(1, 3.0), _trial(2, 4.0)])
     seqs = sorted(r.seq for r in s2.trials().collect())
     assert seqs == [1, 2, 3, 4]  # unique and monotone, not 1,1,2,2
+
+
+def test_live_schemas_match_the_declared_ones(spark, store):
+    from pyspark.sql.types import StructType
+
+    assert store.trials().schema == trials_to_df(spark, [_trial(1, 1.0)], "max").schema
+    assert store.metrics().schema == StructType.fromDDL(METRICS_SCHEMA)
+
+
+def test_spark_written_part_and_arrow_appends_read_as_one(spark, tmp_path):
+    """A store written by Spark's parquet writer (as earlier live stores
+    were) keeps working: Arrow appends land beside its part."""
+    path = str(tmp_path / "mixed")
+    old = [_trial(1, 10.0, budget=1), _trial(2, 30.0, budget=1)]
+    trials_to_df(spark, old, "max").coalesce(1).write.parquet(os.path.join(path, "trials"))
+    s = ExperimentStore(spark, path, direction="max")
+    s.append_trials([_trial(1, 20.0, budget=2)])
+    s.append_trials([_trial(1, 40.0, budget=2)])
+    seqs = {r.seq: r.final_metric for r in s.trials().collect()}
+    assert seqs == {1: 10.0, 2: 30.0, 3: 20.0, 4: 40.0}
+    res = s.result_summary()
+    assert (res["best_val"], res["worst_val"], res["num_trials"]) == (40.0, 10.0, 4)
+    assert res["avg"] == pytest.approx(25.0)
+
+
+def test_append_runs_no_spark_job(spark, tmp_path, job_group):
+    s = ExperimentStore(spark, str(tmp_path / "nojob"), direction="max")
+    wave = [_trial(1, 1.0), _trial(2, 2.0)]
+    s.append_trials(wave)
+    s.append_metrics(wave)
+    assert job_group() == []
+
+
+def test_append_leaves_no_temp_file(store):
+    for table in ("trials", "metrics"):
+        names = os.listdir(os.path.join(store.path, table))
+        assert names and all(n.startswith("part-") and n.endswith(".parquet") for n in names)
+
+
+def test_unreadable_reused_store_fails_loudly(spark, tmp_path):
+    """A reused store whose trials table cannot be read must raise, not
+    restart seq at 0 and write duplicate tie-break keys."""
+    path = tmp_path / "broken"
+    (path / "trials").mkdir(parents=True)
+    (path / "trials" / "part-x.parquet").write_text("not parquet")
+    s = ExperimentStore(spark, str(path), direction="max")
+    with pytest.raises(Exception):
+        s.append_trials([_trial(1, 1.0)])
+    assert os.listdir(path / "trials") == ["part-x.parquet"]
