@@ -460,7 +460,7 @@ def run_ablation(train_fn: Callable, config: AblationConfig, spark: SparkSession
     engine's relational path; a custom AbstractAblator instance
     (reference `ablation_driver.py:65-77`) is drained through
     `get_trial` reference-style."""
-    from maggy_spark.experiment import _aggregate_result
+    from maggy_spark.experiment import _aggregate_result, _settle_trial
 
     study: AblationStudy = config.ablation_study
     if study is None:
@@ -534,13 +534,7 @@ def run_ablation(train_fn: Callable, config: AblationConfig, spark: SparkSession
     done: list[Trial] = []
     for r in results:
         t = by_id[r["trial_id"]]
-        if r["error"]:
-            t.status = Trial.ERROR
-            t.info_dict["error"] = r["error"]
-        else:
-            t.status = Trial.FINALIZED
-            t.final_metric = r["final_metric"]
-        t.info_dict["seq"] = len(done)
+        _settle_trial(t, r, len(done))
         done.append(t)
 
     result = _aggregate_result(spark, done, config.direction)
@@ -564,7 +558,7 @@ def _run_custom_ablator(train_fn: Callable, config: AblationConfig, spark: Spark
     before shipping), so they are cloudpickled by value into a
     trial_id-keyed map captured by the wave closure."""
     from maggy_spark.executor import _dumps_by_value, build_kwargs  # noqa: F401
-    from maggy_spark.experiment import _aggregate_result
+    from maggy_spark.experiment import _aggregate_result, _settle_trial
 
     study: AblationStudy = config.ablation_study
     final_store: list[Trial] = []
@@ -656,13 +650,7 @@ def _run_custom_ablator(train_fn: Callable, config: AblationConfig, spark: Spark
         results = run_trial_wave(spark, pending, wrapped, optimization_key=config.optimization_key)
         for r in results:
             t = by_id[r["trial_id"]]
-            if r["error"]:
-                t.status = Trial.ERROR
-                t.info_dict["error"] = r["error"]
-            else:
-                t.status = Trial.FINALIZED
-                t.final_metric = r["final_metric"]
-            t.info_dict["seq"] = len(done)
+            _settle_trial(t, r, len(done))
             done.append(t)
             final_store.append(t)
             finished_q.append(t)

@@ -51,13 +51,18 @@ class HyperparameterOptConfig(BaseConfig):
     pruner_kwargs: dict | None = None
     seed: int | None = None
     parallelism: int | None = None  # max concurrent trials (defaults to cores)
-    # "wave": batch-synchronous waves of `parallelism` trials — lowest
-    # overhead; use for short trials.
-    # "async": per-trial Spark jobs from a driver thread pool (FAIR
-    # pool) — a finished slot is refilled immediately, preserving the
-    # reference's async scheduling (optimization_driver.py:519-541),
-    # which ASHA/BO exploit. Each job pays ~1 s submission overhead,
-    # so prefer it only when trial runtime dominates (real training).
+    # Both modes run one refill loop (experiment._refill); this picks
+    # the batch shape. Trial jobs run from driver threads under the
+    # caller's job group, in the caller's scheduler pool if it set one,
+    # else in the 'maggy' pool (no effect under FIFO scheduling).
+    # "wave": one Spark job per batch of `parallelism` trials, the next
+    # batch once the whole batch settles — fewest jobs; use for short
+    # trials.
+    # "async": one Spark job per trial, `parallelism` in flight — a
+    # finished slot is refilled immediately, preserving the reference's
+    # async scheduling (optimization_driver.py:519-541), which ASHA/BO
+    # exploit. Every trial pays its own job submission, so prefer it
+    # when trial runtime dominates (real training).
     scheduling: str = "wave"
 
 

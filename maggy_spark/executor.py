@@ -108,7 +108,6 @@ def run_trial_wave(
     train_fn: Callable,
     optimization_key: str = "metric",
     stop_check_source: str | None = None,
-    extras: dict | None = None,
     tb_base_dir: str | None = None,
     fn_bytes: bytes | None = None,
     log_dir: str | None = None,
@@ -149,14 +148,12 @@ def run_trial_wave(
     # modules (notebooks, test files, scripts) that executor Python
     # workers cannot re-import; plain closure capture would pickle them
     # by reference and fail with ModuleNotFoundError on the worker.
-    # Callers that dispatch MANY single-trial waves (the async driver)
-    # pass pre-serialized bytes so the closure walk + registry dance
-    # runs once per experiment, not once per trial.
+    # The experiment driver passes pre-serialized bytes so the closure
+    # walk + registry dance runs once per experiment, not per batch.
     if fn_bytes is None:
         fn_bytes = _dumps_by_value(train_fn)
     opt_key = optimization_key
     stop_src = stop_check_source
-    extra_static = extras or {}
     tb_base = tb_base_dir
     log_base = log_dir
 
@@ -209,10 +206,7 @@ def run_trial_wave(
 
         buf = io.StringIO()
         try:
-            ex = dict(extra_static)
-            if budget:
-                ex.setdefault("budget", budget)
-            kwargs = build_kwargs(fn, hparams, reporter, ex)
+            kwargs = build_kwargs(fn, hparams, reporter, {"budget": budget} if budget else None)
             with contextlib.redirect_stdout(buf):
                 ret = fn(**kwargs)
             final = normalize_return(ret, opt_key)
@@ -323,9 +317,9 @@ def _dumps_by_value(fn) -> bytes:
     restore the registry.
 
     Serialized under a lock: the register/unregister pair mutates
-    cloudpickle's GLOBAL registry, and _drive_async calls this from a
-    thread pool — an interleaved unregister would silently flip a
-    concurrent dumps back to by-reference pickling.
+    cloudpickle's GLOBAL registry, and experiments may run from
+    several driver threads at once — an interleaved unregister would
+    silently flip a concurrent dumps back to by-reference pickling.
     """
     from pyspark import cloudpickle as cp
 

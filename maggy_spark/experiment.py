@@ -3,20 +3,27 @@
 Reference lifecycle (SURVEY.md §3.1, `maggy/experiment/experiment.py:
 21-45`, `experiment_pyspark.py:43-146`): dispatch on config type,
 drive trials to completion, return the result dict. The rebuild's
-loop is wave-based: the controller emits pending trials, each wave
-runs as a grouped pandas UDF (executor.py), finalized trials feed
-back into the controller, and the final result is a Spark
+driver is one refill loop (`_refill`): the controller emits pending
+trials, each batch runs as one Spark job of pandas UDF tasks
+(executor.py), settled trials feed back into the controller and free
+their slot for the next batch, and the final result is a Spark
 aggregation over the trials DataFrame (operator A1) — no RPC server,
 no reservation registry, no digestion threads.
 
-Asynchrony note (SURVEY.md §7.3b): the reference assigns a new trial
-the instant one finishes. Wave scheduling approximates that with
-wave size = parallelism; ASHA promotions are checked between waves.
+Scheduling (SURVEY.md §7.3b): the reference assigns a new trial the
+instant one finishes. `scheduling="async"` does the same with
+single-trial batches; `scheduling="wave"` runs batches of
+`parallelism` trials, one at a time, so ASHA promotions are checked
+between waves.
 """
 
 from __future__ import annotations
 
+import base64
 import json
+import operator
+import os
+import tempfile
 import time
 from typing import Any, Callable
 
@@ -144,7 +151,7 @@ _LOG = logging.getLogger("maggy_spark")
 
 
 def _log_progress(controller, settled: int) -> None:
-    """A11: per-wave progress line (reference util.progress_bar,
+    """A11: progress line after each settle (reference util.progress_bar,
     printed on the driver; INFO level so notebooks opt in)."""
     from maggy_spark.util import progress_bar
 
@@ -154,52 +161,28 @@ def _log_progress(controller, settled: int) -> None:
 
 def _bar_payload(controller, config) -> dict:
     """Current early-stop state: histories appear only once es_min
-    trials have finalized (medianrule.py min-completed gate). For a
-    custom rule, the rule's check function travels cloudpickled (by
-    value — user rules live in un-importable notebook modules) with
-    richer finalized-trial snapshots for its Trial-shaped arguments."""
-    histories = []
-    finalized = []
-    past_gate = len(controller.final_store) >= config.es_min
-    if past_gate:
-        histories = [t.metric_history for t in controller.final_store if t.metric_history]
+    trials have finalized (medianrule.py min-completed gate). A custom
+    rule also gets finalized-trial snapshots for its Trial-shaped
+    arguments."""
+    finals = controller.final_store if len(controller.final_store) >= config.es_min else []
     payload = {
         "direction": config.direction,
         "es_interval": config.es_interval,
-        "prefix_histories": histories,
+        "prefix_histories": [t.metric_history for t in finals if t.metric_history],
     }
-    rule_fn = _es_custom_rule(config)
-    if rule_fn is not None:
-        import base64
-
-        from maggy_spark.executor import _dumps_by_value
-
-        if past_gate:
-            finalized = [
-                {
-                    "trial_id": t.trial_id,
-                    "metric_history": list(t.metric_history),
-                    "final_metric": t.final_metric,
-                }
-                for t in controller.final_store
-            ]
-        # the rule function is static WITHIN one experiment: pickle it
-        # once per run and memoize on the CONTROLLER (reset at
-        # initialize) — _bar_payload runs per bar refresh and, in the
-        # async path, per trial submission. Memoizing on the function
-        # object itself would live for the whole process: a rule
-        # reused across experiments whose closure state was mutated
-        # between runs would ship the stale first pickle forever.
-        cached = getattr(controller, "_maggy_rule_b64", None)
-        if cached is None:
-            cached = base64.b64encode(_dumps_by_value(rule_fn)).decode("ascii")
-            controller._maggy_rule_b64 = cached
-        payload["custom_rule"] = cached
-        payload["finalized"] = finalized
+    if _es_custom_rule(config) is not None:
+        payload["finalized"] = [
+            {"trial_id": t.trial_id, "metric_history": list(t.metric_history), "final_metric": t.final_metric}
+            for t in finals
+        ]
     return payload
 
 
-def _stop_source(controller, config, refresh_path: str | None = None) -> str | None:
+def _stop_source(controller, config, rule_b64: str | None, refresh_path: str | None) -> str | None:
+    """The early-stop state shipped with one batch. A custom rule's
+    check function travels as `rule_b64`: cloudpickled by value (user
+    rules live in un-importable notebook modules), once per
+    experiment."""
     if not _es_enabled(config):
         return None
     payload = _bar_payload(controller, config)
@@ -210,6 +193,8 @@ def _stop_source(controller, config, refresh_path: str | None = None) -> str | N
         payload["refresh_path"] = refresh_path
     elif not payload["prefix_histories"] and not payload.get("finalized"):
         return None
+    if rule_b64 is not None:
+        payload["custom_rule"] = rule_b64
     return json.dumps(payload)
 
 
@@ -217,8 +202,6 @@ def _publish_bar(controller, config, refresh_path: str) -> None:
     """Atomically publish the tightened bar for in-flight trials
     (write + os.replace: readers see the old or the new file, never a
     torn one)."""
-    import os
-
     payload = _bar_payload(controller, config)
     tmp = f"{refresh_path}.tmp.{os.getpid()}"
     with open(tmp, "w") as f:
@@ -226,7 +209,10 @@ def _publish_bar(controller, config, refresh_path: str) -> None:
     os.replace(tmp, refresh_path)
 
 
-def _apply_result(controller, trial: Trial, r: dict, seq: int) -> None:
+def _settle_trial(trial: Trial, r: dict, seq: int) -> None:
+    """Write one `run_trial_wave` result row onto its Trial: status,
+    metric, histories, duration, logs, error and seq. Controller-free,
+    so HPO and ablation settle through the same step."""
     trial.metric_history = list(r["metric_history"] or [])
     trial.step_history = [int(s) for s in (r["step_history"] or [])]
     trial.early_stop = bool(r["early_stop"])
@@ -236,12 +222,20 @@ def _apply_result(controller, trial: Trial, r: dict, seq: int) -> None:
     if r["error"]:
         trial.status = Trial.ERROR
         trial.info_dict["error"] = r["error"]
-        controller.report_error(trial)  # rung ledgers / busy sets / done() accounting
     else:
         trial.status = Trial.FINALIZED
         trial.final_metric = r["final_metric"]
-        controller.finalize_trial(trial)
     trial.info_dict["seq"] = seq
+
+
+def _is_count(n) -> bool:
+    """An integer >= 1; numpy integers count, bools do not."""
+    if isinstance(n, bool):
+        return False
+    try:
+        return operator.index(n) >= 1
+    except TypeError:
+        return False
 
 
 def _run_hpo(train_fn: Callable, config: HyperparameterOptConfig, spark: SparkSession) -> dict:
@@ -256,6 +250,10 @@ def _run_hpo(train_fn: Callable, config: HyperparameterOptConfig, spark: SparkSe
         raise ValueError("HyperparameterOptConfig.searchspace is required")
     if config.direction not in ("min", "max"):
         raise ValueError(f"direction must be 'min' or 'max', got {config.direction!r}")
+    if config.scheduling not in ("wave", "async"):
+        raise ValueError(f"scheduling must be 'wave' or 'async', got {config.scheduling!r}")
+    if config.parallelism is not None and not _is_count(config.parallelism):
+        raise ValueError(f"parallelism must be None or an integer >= 1, got {config.parallelism!r}")
     _es_enabled(config)  # reject unsupported policies before any work
     controller.initialize(
         searchspace=config.searchspace,
@@ -264,8 +262,7 @@ def _run_hpo(train_fn: Callable, config: HyperparameterOptConfig, spark: SparkSe
         seed=config.seed,
     )
     controller.spark = spark  # controllers may fan work out (e.g. GP distributed scoring)
-    controller._maggy_rule_b64 = None  # per-run custom-rule pickle memo (_bar_payload)
-    parallelism = config.parallelism or spark.sparkContext.defaultParallelism
+    parallelism = int(config.parallelism or spark.sparkContext.defaultParallelism)
 
     store = None
     exp_dir = None
@@ -283,10 +280,7 @@ def _run_hpo(train_fn: Callable, config: HyperparameterOptConfig, spark: SparkSe
             store = ExperimentStore(spark, exp_dir + "/live", direction=config.direction)
 
     t_start = time.time()
-    if config.scheduling == "async":
-        all_trials, waves = _drive_async(train_fn, config, spark, controller, parallelism, store, exp_dir)
-    else:
-        all_trials, waves = _drive_waves(train_fn, config, spark, controller, parallelism, store, exp_dir)
+    all_trials, waves = _drive(train_fn, config, spark, controller, parallelism, store, exp_dir)
 
     result = _aggregate_result(spark, all_trials, config.direction)
     result["duration_sec"] = round(time.time() - t_start, 3)
@@ -324,163 +318,135 @@ def _tb_base(config) -> str:
     (reference tensorboard.py:28-37): under log_dir when configured,
     else a temp location so in-function `tensorboard.logdir()` always
     resolves."""
-    import os
-    import tempfile
-
     base = config.log_dir or os.path.join(tempfile.gettempdir(), "maggy_tb")
     return os.path.join(base, f"{config.name}_tb")
 
 
-def _drive_waves(train_fn, config, spark, controller, parallelism, store=None, exp_dir=None) -> tuple[list[Trial], int]:
-    """Batch-synchronous scheduling: waves of `parallelism` trials."""
-    all_trials: list[Trial] = []
-    seq = 0
-    waves = 0
-    while not controller.done():
-        wave = controller.next_batch(parallelism)
-        if not wave:
-            # the controller exhausted at a wave boundary (e.g. a
-            # custom optimizer out of suggestions before num_trials):
-            # ask done() one last time — it is the hook that fires a
-            # reference optimizer's finalize_experiment, which must run
-            # on EVERY exit path, not only the done()-gated one
-            controller.done()
-            break
-        stop_src = _stop_source(controller, config)
-        pending = [
-            {"trial_id": t.trial_id, "params": t.params, "budget": int(t.info_dict.get("budget", 0))}
-            for t in wave
-        ]
-        by_id = {t.trial_id: t for t in wave}
-        results = run_trial_wave(
-            spark, pending, train_fn,
-            optimization_key=config.optimization_key,
-            stop_check_source=stop_src,
-            tb_base_dir=_tb_base(config),
-            log_dir=exp_dir,
-        )
-        done_wave = []
-        for r in results:
-            seq += 1
-            t = by_id[r["trial_id"]]
-            _apply_result(controller, t, r, seq)
-            all_trials.append(t)
-            done_wave.append(t)
-        if store is not None:
-            store.append_trials(done_wave)
-            store.append_metrics(done_wave)
-        _log_progress(controller, len(all_trials))
-        waves += 1
-        if waves > 10_000:
-            raise RuntimeError("experiment did not converge (wave limit)")
-    return all_trials, waves
-
-
-def _drive_async(train_fn, config, spark, controller, parallelism, store=None, exp_dir=None) -> tuple[list[Trial], int]:
-    """Per-trial scheduling: a driver thread pool keeps `parallelism`
-    single-trial Spark jobs in flight and refills a slot the moment a
-    trial finishes — the reference's asynchrony
+def _refill(spark, controller, slots: int, size: int, start, on_settle=None) -> tuple[list[Trial], int]:
+    """The trial loop: a driver thread pool keeps up to `slots`
+    batches of up to `size` trials in flight and refills a slot the
+    moment its batch settles — the reference's asynchrony
     (`optimization_driver.py:519-541`) without its socket plane.
-    Each job runs in the 'maggy' FAIR scheduler pool so concurrent
-    trials share executors fairly (SURVEY.md §7.3b), under the
-    caller's job group."""
+
+    `start(batch)` runs in the driver thread and returns the job that
+    a pool thread runs: a callable returning one `run_trial_wave`-shaped
+    result row per trial. Each settled trial goes through
+    `_settle_trial` (seq in settle order), then to the controller;
+    `on_settle(settled, n_done)` follows each settle. Jobs run under
+    the caller's job group and local properties, and in the 'maggy'
+    FAIR scheduler pool unless the caller set a pool (SURVEY.md §7.3b).
+    Returns the settled trials and the number of batches."""
     from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 
     from pyspark import inheritable_thread_target
 
+    def in_pool(job):
+        sc = spark.sparkContext
+        if sc.getLocalProperty("spark.scheduler.pool") is None:
+            sc.setLocalProperty("spark.scheduler.pool", "maggy")
+        return job()
+
+    # wrapped here, in the driver thread: the pool threads inherit the
+    # caller's job group and local properties
+    run = inheritable_thread_target(spark)(in_pool)
     all_trials: list[Trial] = []
-    seq = 0
-    jobs = 0
-    # serialize the train_fn ONCE: the async path dispatches one wave
-    # per trial, and per-call _dumps_by_value would redo the closure
-    # walk + cloudpickle registry dance (under a global lock) for
-    # every single trial
+    batches = 0
+    in_flight: dict = {}  # future -> its batch
+    with ThreadPoolExecutor(max_workers=slots) as pool:
+        while True:
+            while len(in_flight) < slots and not controller.done():
+                batch = controller.next_batch(size)
+                if not batch:
+                    break
+                in_flight[pool.submit(run, start(batch))] = batch
+                batches += 1
+            if not in_flight:
+                # nothing runnable and nothing in flight: ask done()
+                # once more — it is the hook that fires a reference
+                # optimizer's finalize_experiment, which must run on
+                # EVERY exit, not only the done()-gated one
+                controller.done()
+                break
+            if batches > 100_000:
+                raise RuntimeError("experiment did not converge (batch limit)")
+            finished, _ = wait(in_flight, return_when=FIRST_COMPLETED)
+            settled = []
+            for f in finished:
+                by_id = {t.trial_id: t for t in in_flight.pop(f)}
+                for r in f.result():
+                    t = by_id[r["trial_id"]]
+                    _settle_trial(t, r, len(all_trials) + 1)
+                    if t.status == Trial.ERROR:
+                        controller.report_error(t)  # rung ledgers / busy sets / done() accounting
+                    else:
+                        controller.finalize_trial(t)
+                    all_trials.append(t)
+                    settled.append(t)
+            if on_settle is not None:
+                on_settle(settled, len(all_trials))
+    return all_trials, batches
+
+
+def _drive(train_fn, config, spark, controller, parallelism, store=None, exp_dir=None) -> tuple[list[Trial], int]:
+    """HPO over `_refill`: each batch is one `run_trial_wave` Spark
+    job. `config.scheduling` decides only the batch shape: "async"
+    keeps `parallelism` single-trial batches in flight; "wave" runs
+    one batch of up to `parallelism` trials once the previous one
+    settles."""
     from maggy_spark.executor import _dumps_by_value
 
+    is_async = config.scheduling == "async"
+    # the train_fn and a custom early-stop rule are static within one
+    # experiment: pickle each once here, not per batch
     fn_bytes = _dumps_by_value(train_fn)
-
-    def run_one(trial: Trial, stop_src: str | None) -> tuple[Trial, dict]:
-        spark.sparkContext.setLocalProperty("spark.scheduler.pool", "maggy")
-        res = run_trial_wave(
-            spark,
-            [{"trial_id": trial.trial_id, "params": trial.params,
-              "budget": int(trial.info_dict.get("budget", 0))}],
-            train_fn,
-            optimization_key=config.optimization_key,
-            stop_check_source=stop_src,
-            tb_base_dir=_tb_base(config),
-            fn_bytes=fn_bytes,
-            log_dir=exp_dir,
-        )
-        return trial, res[0]
-
+    rule_fn = _es_custom_rule(config)
+    rule_b64 = None if rule_fn is None else base64.b64encode(_dumps_by_value(rule_fn)).decode("ascii")
+    tb_base = _tb_base(config)
     # continuous early-stop bar (reference re-evaluates the rule at
     # every METRIC heartbeat, optimization_driver.py:456-471): the
     # driver republishes the bar file as trials settle and in-flight
-    # trials re-read it at their next broadcast. Under log_dir the file
-    # is on the experiment's (shared) storage; tmpdir in local mode.
-    es_refresh_path = None
-    if _es_enabled(config):
-        import os
-        import tempfile
-
+    # trials re-read it at their next broadcast. Async only: a wave's
+    # trials settle together, so none is left in flight to read it.
+    # Under log_dir the file is on the experiment's (shared) storage;
+    # tmpdir in local mode.
+    bar_path = None
+    if is_async and _es_enabled(config):
         base = config.log_dir or tempfile.gettempdir()
         os.makedirs(base, exist_ok=True)
-        es_refresh_path = os.path.join(
-            base, f".maggy_bar_{config.name}_{os.getpid()}_{id(controller):x}.json"
+        bar_path = os.path.join(base, f".maggy_bar_{config.name}_{os.getpid()}_{id(controller):x}.json")
+
+    def start(batch: list[Trial]):
+        pending = [
+            {"trial_id": t.trial_id, "params": t.params, "budget": int(t.info_dict.get("budget", 0))}
+            for t in batch
+        ]
+        stop_src = _stop_source(controller, config, rule_b64, bar_path)
+        return lambda: run_trial_wave(
+            spark, pending, train_fn,
+            optimization_key=config.optimization_key,
+            stop_check_source=stop_src,
+            tb_base_dir=tb_base,
+            fn_bytes=fn_bytes,
+            log_dir=exp_dir,
         )
 
-    try:
-        with ThreadPoolExecutor(max_workers=parallelism) as pool:
-            in_flight = set()
-            stall = 0
-            while True:
-                while len(in_flight) < parallelism and not controller.done():
-                    batch = controller.next_batch(1)
-                    if not batch:
-                        break
-                    # wrapped here, in the driver thread: the trial's jobs
-                    # inherit the caller's job group and local properties
-                    in_flight.add(
-                        pool.submit(
-                            inheritable_thread_target(spark)(run_one),
-                            batch[0],
-                            _stop_source(controller, config, es_refresh_path),
-                        )
-                    )
-                    jobs += 1
-                if not in_flight:
-                    if controller.done():
-                        break
-                    stall += 1
-                    if stall > 3:
-                        break  # controller has nothing runnable and nothing in flight
-                    continue
-                stall = 0
-                done, in_flight = wait(in_flight, return_when=FIRST_COMPLETED)
-                settled = []
-                for f in done:
-                    trial, r = f.result()
-                    seq += 1
-                    _apply_result(controller, trial, r, seq)
-                    all_trials.append(trial)
-                    settled.append(trial)
-                if settled and es_refresh_path is not None:
-                    _publish_bar(controller, config, es_refresh_path)
-                if store is not None and settled:
-                    store.append_trials(settled)
-                    store.append_metrics(settled)
-                if jobs > 100_000:
-                    raise RuntimeError("experiment did not converge (job limit)")
-    finally:
-        if es_refresh_path is not None:
-            import os
+    def on_settle(settled: list[Trial], n_done: int) -> None:
+        if bar_path is not None:
+            _publish_bar(controller, config, bar_path)
+        if store is not None:
+            store.append_trials(settled)
+            store.append_metrics(settled)
+        _log_progress(controller, n_done)
 
+    slots, size = (parallelism, 1) if is_async else (1, parallelism)
+    try:
+        return _refill(spark, controller, slots, size, start, on_settle)
+    finally:
+        if bar_path is not None:
             try:
-                os.remove(es_refresh_path)
+                os.remove(bar_path)
             except OSError:
                 pass
-    return all_trials, jobs
 
 
 def trials_to_df(spark: SparkSession, trials: list[Trial], direction: str = "max"):

@@ -37,11 +37,10 @@ not by recall on this isotropic fixture).
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from maggy_spark.plans.fixtures import corpus_count, load_table
+from maggy_spark.plans.fixtures import corpus_count, load_table, session_cached
 
 N_QUERIES = 5     # vec_id < 5 are the query vectors
 TOP_K = 5
@@ -212,40 +211,32 @@ def _bucketed(spark: SparkSession, sf_dir: str, target: int = TARGET_BUCKET_VECS
     in lockstep with it — returning it together removes the coupled
     re-derivation). Plane count derives from the corpus size
     (ann_planes); the anchor embeddings are collected to the driver
-    ONCE per session (<= 16 tiny rows, via a pushed-down vec_id
+    once per build (<= 16 tiny rows, via a pushed-down vec_id
     filter) and embedded as literal arrays, so the bucket is a pure
     map-side projection — no extra scan, shuffle, or broadcast per
-    query. The DataFrame is session-cached AND persisted here (a
-    deliberate session-scoped signatures table, like a dedup
-    pipeline's persisted signature relation): every ANN operator over
-    the same (sf_dir, target) reuses one lineage, and both sides of a
-    pair self-join read the materialization. persist() is idempotent
-    guarded, so callers never re-persist or unpersist it."""
-    cache = getattr(spark, "_maggy_bucketed", None)
-    if cache is None:
-        cache = {}
-        spark._maggy_bucketed = cache
-    key = (sf_dir, target)
-    if key in cache:
-        df, n_planes = cache[key]
-        if df.storageLevel == StorageLevel.NONE:
-            df.persist()  # re-pin if an external clearCache() dropped it
-        return df, n_planes
-    e = load_table(spark, sf_dir, "embeddings", fan_out=True)
+    query. The DataFrame is a `session_cached` relation (a deliberate
+    session-scoped signatures table, like a dedup pipeline's persisted
+    signature relation): every ANN operator over the same
+    (sf_dir, target) reuses one lineage, both sides of a pair
+    self-join read the materialization, and
+    `invalidate_session_cache` drops it with the rest of the
+    path's state."""
     n_planes = ann_planes(corpus_count(spark, sf_dir, "embeddings"), target)
-    bucket = _bucket_expr(_plane_literals(spark, sf_dir, n_planes))
-    df = (
-        e.select(F.col("vec_id"), F.col("label"), F.col("embedding").alias("emb"))
-        .select(
-            "vec_id", "label", "emb",
-            F.sqrt(_dot("emb", "emb")).alias("norm"),
-            bucket.alias("bucket"),
+
+    def build() -> DataFrame:
+        e = load_table(spark, sf_dir, "embeddings", fan_out=True)
+        bucket = _bucket_expr(_plane_literals(spark, sf_dir, n_planes))
+        return (
+            e.select(F.col("vec_id"), F.col("label"), F.col("embedding").alias("emb"))
+            .select(
+                "vec_id", "label", "emb",
+                F.sqrt(_dot("emb", "emb")).alias("norm"),
+                bucket.alias("bucket"),
+            )
+            .where(F.col("norm") > 0)  # degenerate-vector rule (see _cosine)
         )
-        .where(F.col("norm") > 0)  # degenerate-vector rule (see _cosine)
-        .persist()
-    )
-    cache[key] = (df, n_planes)
-    return df, n_planes
+
+    return session_cached(spark, (sf_dir, "ann_bucketed", target), build), n_planes
 
 
 def _with_buckets(spark: SparkSession, sf_dir: str, target: int = TARGET_BUCKET_VECS) -> DataFrame:

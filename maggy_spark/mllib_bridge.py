@@ -14,7 +14,7 @@ Two integration points:
 
 from __future__ import annotations
 
-from concurrent.futures import ThreadPoolExecutor
+import time
 from typing import Any
 
 from maggy_spark.searchspace import CATEGORICAL, DISCRETE, DOUBLE, INTEGER, Searchspace
@@ -101,58 +101,46 @@ def fit_with_lagom(
 ) -> dict:
     """Drive MLlib fits with a maggy controller.
 
-    `estimator_factory(params) -> Estimator`; each wave's fits run in
-    a driver thread pool — each fit is a distributed Spark job (use a
-    FAIR scheduler pool on a shared cluster). The result dict matches
-    `lagom`'s.
+    `estimator_factory(params) -> Estimator`. The fits run through
+    `lagom`'s trial loop (`experiment._refill`) with `parallelism`
+    single-trial slots, each fit a distributed Spark job from a driver
+    thread under the caller's job group (use a FAIR scheduler pool on
+    a shared cluster). A fit that raises settles as an ERROR trial.
+    The result dict matches `lagom`'s.
     """
+    from maggy_spark.experiment import _aggregate_result, _refill
     from maggy_spark.optimizers import get_controller
 
     controller = get_controller(optimizer)
     controller.initialize(searchspace=searchspace, num_trials=num_trials, direction=direction, seed=seed)
+    spark = train_df.sparkSession
 
-    results: list[Trial] = []
+    def fit(trial: Trial) -> dict:
+        t0 = time.time()
+        metric, error = None, None
+        try:
+            model = estimator_factory(trial.params).fit(train_df)
+            metric = float(evaluator.evaluate(model.transform(val_df)))
+        except Exception as e:
+            error = f"{type(e).__name__}: {e}"
+        return {
+            "trial_id": trial.trial_id, "final_metric": metric, "error": error,
+            "metric_history": [], "step_history": [], "early_stop": False,
+            "duration_ms": int((time.time() - t0) * 1000),
+        }
 
-    def run_one(trial: Trial) -> Trial:
-        # concurrent fits share executors fairly when the session runs
-        # spark.scheduler.mode=FAIR; harmless under FIFO
-        train_df.sparkSession.sparkContext.setLocalProperty("spark.scheduler.pool", "maggy")
-        est = estimator_factory(trial.params)
-        model = est.fit(train_df)
-        metric = float(evaluator.evaluate(model.transform(val_df)))
-        trial.finalize(metric)
-        return trial
-
-    seq = 0
-    while not controller.done():
-        wave = controller.next_batch(parallelism)
-        if not wave:
-            break
-        with ThreadPoolExecutor(max_workers=parallelism) as pool:
-            for t in pool.map(run_one, wave):
-                seq += 1
-                t.info_dict["seq"] = seq
-                controller.finalize_trial(t)
-                results.append(t)
-
-    if not results:
+    trials, _ = _refill(spark, controller, parallelism, 1, lambda batch: lambda: [fit(t) for t in batch])
+    if not trials:
         raise ValueError(
             "controller produced no trials (num_trials=0 or done() was "
             "immediately true) — nothing to fit"
         )
-    sign = -1.0 if direction == "min" else 1.0
-    ordered = sorted(results, key=lambda t: sign * t.final_metric, reverse=True)
-    best, worst = ordered[0], ordered[-1]
-    return {
-        "best_id": best.trial_id,
-        "best_val": best.final_metric,
-        "best_config": dict(best.params),
-        "worst_id": worst.trial_id,
-        "worst_val": worst.final_metric,
-        "avg": sum(t.final_metric for t in results) / len(results),
-        "num_trials": len(results),
-        "early_stopped": 0,
-    }
+    result = _aggregate_result(spark, trials, direction)
+    result["errors"] = sum(t.status == Trial.ERROR for t in trials)
+    best = next((t for t in trials if t.trial_id == result.get("best_id")), None)
+    if best is not None:
+        result["best_config"] = dict(best.params)
+    return result
 
 
 def minhash_lsh_near_dup(

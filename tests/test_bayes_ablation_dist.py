@@ -188,6 +188,16 @@ def test_lagom_validation_errors(spark):
             ),
             spark,
         )
+    space = Searchspace(x=("DOUBLE", [0, 1]), y=("DOUBLE", [0, 1]))
+    with pytest.raises(ValueError, match="scheduling"):
+        lagom(parabola, HyperparameterOptConfig(num_trials=2, searchspace=space, scheduling="asynch"), spark)
+    with pytest.raises(ValueError, match="parallelism"):
+        lagom(parabola, HyperparameterOptConfig(num_trials=2, searchspace=space, parallelism=-2), spark)
+    with pytest.raises(ValueError, match="parallelism"):
+        lagom(parabola, HyperparameterOptConfig(num_trials=2, searchspace=space, parallelism=True), spark)
+    # numpy integers (configs built from sweeps) are valid parallelism
+    res = lagom(parabola, HyperparameterOptConfig(num_trials=2, searchspace=space, parallelism=np.int64(2)), spark)
+    assert res["num_trials"] == 2
 
 
 def test_gp_multi_fidelity_model_selection():

@@ -196,10 +196,12 @@ def test_get_XY_alias(spark=None):
     assert X.shape == (1, 1) and y.tolist() == [1.0]
 
 
-def test_async_scheduling_with_custom_optimizer_and_rule(spark):
+@pytest.mark.parametrize("scheduling", ["async", "wave"])
+def test_async_scheduling_with_custom_optimizer_and_rule(spark, scheduling):
     """The reference-protocol adapter and a custom early-stop rule
-    both survive the async (per-trial refill) scheduler, including
-    the bar-file republish path."""
+    both survive either batch shape of the refill loop, including the
+    async bar-file republish path and finalize_experiment on the
+    shared exit."""
     from maggy.earlystop import AbstractEarlyStop
     from maggy_spark.config import HyperparameterOptConfig
     from maggy_spark.experiment import lagom
@@ -225,7 +227,7 @@ def test_async_scheduling_with_custom_optimizer_and_rule(spark):
         optimizer=opt,
         searchspace=make_space(),
         direction="max",
-        scheduling="async",
+        scheduling=scheduling,
         parallelism=2,
         es_policy=AlwaysStopLate,
         es_min=1,

@@ -316,12 +316,37 @@ def test_aggregate_all_error_trials_runs_no_job(spark, job_group):
     assert job_group() == []
 
 
-def test_async_trial_jobs_inherit_job_group(spark, job_group):
+@pytest.mark.parametrize("scheduling, batches", [("async", 8), ("wave", 2)])
+def test_async_trial_jobs_inherit_job_group(spark, job_group, scheduling, batches):
     config = HyperparameterOptConfig(
         num_trials=8, optimizer="randomsearch", searchspace=Searchspace(**SP),
-        direction="max", es_policy="none", seed=3, parallelism=4, scheduling="async",
+        direction="max", es_policy="none", seed=3, parallelism=4, scheduling=scheduling,
     )
     res = lagom(lambda x, y: x + y, config, spark)
-    assert res["num_waves"] == 8
-    # one job per trial in the pool threads, plus the driver's aggregate
-    assert len(job_group()) >= 8
+    assert res["num_waves"] == batches
+    # one job per batch in the pool threads, plus the driver's aggregate
+    assert len(job_group()) >= batches + 1
+
+
+@pytest.mark.parametrize("pool", [None, "mine"])
+def test_trial_jobs_scheduler_pool(spark, pool):
+    """Trial jobs run in the 'maggy' scheduler pool unless the caller
+    set a pool of its own, which then wins."""
+    want = pool or "maggy"
+
+    def train(x, y):
+        from pyspark import TaskContext
+
+        return 1.0 if TaskContext.get().getLocalProperty("spark.scheduler.pool") == want else 0.0
+
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.scheduler.pool", pool)
+    try:
+        res = lagom(train, HyperparameterOptConfig(
+            num_trials=4, optimizer="randomsearch", searchspace=Searchspace(**SP),
+            direction="max", es_policy="none", seed=3, parallelism=2,
+        ), spark)
+    finally:
+        sc.setLocalProperty("spark.scheduler.pool", None)
+    assert res["num_trials"] == 4
+    assert res["worst_val"] == 1.0

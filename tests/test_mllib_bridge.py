@@ -61,7 +61,7 @@ def test_cross_validate_runs(spark, train_df):
     assert max(model.avgMetrics) > 0.9  # separable by construction
 
 
-def test_fit_with_lagom_controller(spark, train_df):
+def test_fit_with_lagom_controller(spark, train_df, job_group):
     from pyspark.ml.classification import LogisticRegression
     from pyspark.ml.evaluation import BinaryClassificationEvaluator
 
@@ -82,6 +82,35 @@ def test_fit_with_lagom_controller(spark, train_df):
     )
     assert res["num_trials"] == 4
     assert res["best_val"] >= res["worst_val"]
+    assert res["best_val"] > 0.9
+    # the fits run in pool threads under the caller's job group; the
+    # driver thread itself runs no job here
+    assert len(job_group()) >= 4
+
+
+def test_fit_with_lagom_failed_fit_settles_as_error(spark, train_df):
+    """A fit that raises becomes an ERROR trial, as in `lagom`; the
+    other fits still run and the result counts the error."""
+    import itertools
+
+    from pyspark.ml.classification import LogisticRegression
+    from pyspark.ml.evaluation import BinaryClassificationEvaluator
+
+    calls = itertools.count()
+
+    def factory(params):
+        if next(calls) == 0:
+            raise RuntimeError("bad estimator")
+        return LogisticRegression(featuresCol="features", labelCol="label", maxIter=3)
+
+    train, val = train_df.randomSplit([0.8, 0.2], seed=1)
+    res = fit_with_lagom(
+        factory, BinaryClassificationEvaluator(labelCol="label"),
+        Searchspace(reg=("DOUBLE", [0.0, 0.5])), train, val,
+        num_trials=3, parallelism=2, seed=7,
+    )
+    assert res["errors"] == 1
+    assert res["num_trials"] == 2
     assert res["best_val"] > 0.9
 
 

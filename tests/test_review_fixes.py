@@ -384,6 +384,23 @@ def test_invalidate_session_cache_drops_by_dir(spark, tmp_path):
     invalidate_session_cache(spark)  # leave no leftovers for other tests
 
 
+def test_invalidate_session_cache_drops_ann_buckets(spark, sf_dir):
+    """The ANN bucket relation lives in the session cache: invalidating
+    its path unpersists it and the next call builds a fresh one."""
+    from pyspark import StorageLevel
+
+    from maggy_spark.functions.similarity import _bucketed
+    from maggy_spark.plans.fixtures import invalidate_session_cache
+
+    first, planes = _bucketed(spark, sf_dir)
+    assert _bucketed(spark, sf_dir)[0] is first
+    invalidate_session_cache(spark, sf_dir)
+    assert first.storageLevel == StorageLevel.NONE
+    second, planes2 = _bucketed(spark, sf_dir)
+    assert second is not first and planes2 == planes
+    assert second.storageLevel != StorageLevel.NONE
+
+
 def test_append_trials_mixed_seq_orders_presets_first(spark, tmp_path):
     """A batch mixing preset and missing seq values: presets keep
     their relative order FIRST, seq-less trials follow in batch
@@ -405,42 +422,31 @@ def test_append_trials_mixed_seq_orders_presets_first(spark, tmp_path):
 def test_custom_rule_repickled_per_experiment(spark):
     """A rule object reused across experiments with MUTATED closure
     state must ship the fresh state, not the first run's pickle."""
-    from maggy_spark.experiment import _bar_payload
 
     class Rule:
         POLICY = "custom"
 
         def __init__(self):
-            self.threshold = -1e9
+            self.stop = False
 
         def earlystop_check(self, to_check, finalized, direction):
-            return None
+            return to_check.trial_id if self.stop else None
+
+    def train_fn(x, reporter):
+        for step in range(5):
+            reporter.broadcast(x, step)
+        return x
 
     rule = Rule()
     cfg = HyperparameterOptConfig(
-        num_trials=2, optimizer="randomsearch",
+        num_trials=3, optimizer="randomsearch",
         searchspace=Searchspace(x=("DOUBLE", [0.0, 1.0])),
-        direction="max", es_policy=rule, es_min=1, seed=5,
+        direction="max", es_policy=rule, es_min=1, seed=5, parallelism=1,
     )
-
-    class Ctl:  # minimal controller shape for _bar_payload
-        final_store = []
-        _maggy_rule_b64 = None
-
-    c1 = Ctl()
-    first = _bar_payload(c1, cfg)["custom_rule"]
-    assert _bar_payload(c1, cfg)["custom_rule"] is first  # memoized within a run
-    rule.threshold = 42.0  # mutate closure state between experiments
-    c2 = Ctl()
-    second = _bar_payload(c2, cfg)["custom_rule"]
-    assert second != first  # fresh pickle for the new run
-
-    import base64
-
-    from pyspark import cloudpickle
-
-    rebuilt = cloudpickle.loads(base64.b64decode(second))
-    assert rebuilt.__self__.threshold == 42.0
+    assert lagom(train_fn, cfg, spark)["early_stopped"] == 0
+    rule.stop = True  # mutate closure state between experiments
+    # trials 2 and 3 see a finalized trial and the rule now stops them
+    assert lagom(train_fn, cfg, spark)["early_stopped"] == 2
 
 
 def test_dd11_sql_parameterized_matches_operator(spark):
